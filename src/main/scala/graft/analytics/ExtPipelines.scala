@@ -47,15 +47,25 @@ object ExtPipelines {
     * one pass suffices; aggregate early so the join sees one row per
     * distinct value, not every duplicate). */
   private[graft] def multisetEq(a: DataFrame, b: DataFrame): Boolean = {
+    // exceptAll refuses frames whose columns differ; so does this, by
+    // name and type (nullability aside), instead of silently comparing
+    // only a's columns
+    def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType.catalogString)
+    require(shape(a) == shape(b),
+      s"multisetEq needs equal schemas, got ${shape(a)} vs ${shape(b)}")
     val cols = a.columns.toSeq
-    val ac = a.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__ca"))
+    // count columns named apart from every input column (Spark resolves
+    // names case-insensitively)
+    def fresh(stem: String) = Iterator.from(0).map(i => s"$stem$i")
+      .find(n => !cols.exists(_.equalsIgnoreCase(n))).get
+    val (ca, cb) = (fresh("__ca"), fresh("__cb"))
+    val ac = a.groupBy(cols.map(col): _*).agg(count(lit(1)).as(ca))
       .alias("l")
-    val bc = b.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__cb"))
+    val bc = b.groupBy(cols.map(col): _*).agg(count(lit(1)).as(cb))
       .alias("r")
     val cond = cols.map(c => col(s"l.$c") <=> col(s"r.$c")).reduce(_ && _)
     ac.join(bc, cond, "full_outer")
-      .filter(coalesce(col("__ca"), lit(0L)) =!=
-        coalesce(col("__cb"), lit(0L)))
+      .filter(coalesce(col(ca), lit(0L)) =!= coalesce(col(cb), lit(0L)))
       .isEmpty
   }
 

@@ -1129,7 +1129,9 @@ private[graft] object IndexLayout {
     * at every tier, local or cluster.
     *
     * Failure semantics: EVERY closure runs to completion before the
-    * FIRST failure (in argument order) propagates to the caller. An
+    * FIRST failure (in argument order) propagates to the caller, with
+    * every later sibling failure attached to it as a suppressed
+    * exception, so no diagnostic is lost. An
     * early rethrow would return while sibling stagings still write —
     * the caller's lease is released in its `finally`, so a re-run
     * could acquire the lease and race its own `mode(overwrite)` write
@@ -1154,12 +1156,16 @@ private[graft] object IndexLayout {
         // each get() blocks until ITS task finishes — iterating them all
         // awaits every staging, whatever failed in between
         val outcomes = futures.map(fu => scala.util.Try(fu.get()))
-        outcomes.map {
-          case scala.util.Success(a) => a
+        val failures = outcomes.collect {
           case scala.util.Failure(e: java.util.concurrent.ExecutionException)
-            if e.getCause != null => throw e.getCause
-          case scala.util.Failure(e) => throw e
+            if e.getCause != null => e.getCause
+          case scala.util.Failure(e) => e
         }
+        failures.headOption.foreach { first =>
+          failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        }
+        outcomes.map(_.get)
       } finally pool.shutdown()
     }
 

@@ -32,14 +32,12 @@ object PqExpressions {
   /** Register `graft_pq_encode`, `graft_pq_lut`, `graft_pq_adc`.
     * Idempotent. */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      exprs => PqEncode(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_lut",
-      exprs => PqLut(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc",
-      exprs => AdcDot(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_pq_encode")(
+      exprs => PqEncode(exprs(0), exprs(1), exprs(2), exprs(3)))
+    NativeFunctions.registerOnce(spark, "graft_pq_lut")(
+      exprs => PqLut(exprs(0), exprs(1), exprs(2), exprs(3)))
+    NativeFunctions.registerOnce(spark, "graft_pq_adc")(
+      exprs => AdcDot(exprs(0), exprs(1), exprs(2), exprs(3)))
   }
 
   /** struct(code, norm) packed PQ code + L2 norm (requires

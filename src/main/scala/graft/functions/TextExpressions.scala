@@ -647,11 +647,9 @@ object TextExpressions {
 
   /** Register `graft_repeat_stats` for Column-API and SQL use. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_repeat_stats",
-        arity("graft_repeat_stats", 1, 2)(exprs => RepeatStats(exprs(0),
-          if (exprs.length > 1) exprs(1) else Literal(1))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_repeat_stats")(
+      arity("graft_repeat_stats", 1, 2)(exprs => RepeatStats(exprs(0),
+        if (exprs.length > 1) exprs(1) else Literal(1))))
 
   /** struct(top, dup) repetition stats over the token array's
     * `ngram`-grams (requires [[register]]). */
@@ -660,10 +658,8 @@ object TextExpressions {
 
   /** Register `graft_window_hashes`. Idempotent. */
   def registerWindowHashes(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_window_hashes",
-        arity("graft_window_hashes", 2, 2)(exprs => WindowHashes(exprs(0), exprs(1))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_window_hashes")(
+      arity("graft_window_hashes", 2, 2)(exprs => WindowHashes(exprs(0), exprs(1))))
 
   /** array<struct<s,h>> overlapping window hashes (requires
     * [[registerWindowHashes]]). */
@@ -672,10 +668,8 @@ object TextExpressions {
 
   /** Register `graft_ngrams`. Idempotent. */
   def registerNgrams(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_ngrams",
-        arity("graft_ngrams", 2, 2)(exprs => Ngrams(exprs(0), exprs(1))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_ngrams")(
+      arity("graft_ngrams", 2, 2)(exprs => Ngrams(exprs(0), exprs(1))))
 
   /** array<string> overlapping n-grams (requires [[registerNgrams]]). */
   def ngrams(arr: Column, n: Int): Column =
@@ -683,10 +677,8 @@ object TextExpressions {
 
   /** Register `graft_grid_segments`. Idempotent. */
   def registerGridSegments(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_grid_segments",
-        arity("graft_grid_segments", 2, 2)(exprs => GridSegments(exprs(0), exprs(1))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_grid_segments")(
+      arity("graft_grid_segments", 2, 2)(exprs => GridSegments(exprs(0), exprs(1))))
 
   /** array<struct<pos,seg>> fixed-grid segments (requires
     * [[registerGridSegments]]). */
@@ -695,10 +687,8 @@ object TextExpressions {
 
   /** Register `graft_remove_spans`. Idempotent. */
   def registerRemoveSpans(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_remove_spans",
-        arity("graft_remove_spans", 3, 3)(exprs => RemoveSpans(exprs(0), exprs(1), exprs(2))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_remove_spans")(
+      arity("graft_remove_spans", 3, 3)(exprs => RemoveSpans(exprs(0), exprs(1), exprs(2))))
 
   /** Span-removal rebuild (requires [[registerRemoveSpans]]). */
   def removeSpans(toks: Column, starts: Column, window: Int): Column =
@@ -706,10 +696,8 @@ object TextExpressions {
 
   /** Register `graft_term_freqs`. Idempotent. */
   def registerTermFreqs(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_term_freqs",
-        arity("graft_term_freqs", 2, 2)(exprs => TermFreqs(exprs(0), exprs(1))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_term_freqs")(
+      arity("graft_term_freqs", 2, 2)(exprs => TermFreqs(exprs(0), exprs(1))))
 
   /** struct(dl, tf) one-pass length + term counts (requires
     * [[registerTermFreqs]]). */
@@ -730,10 +718,8 @@ object TextExpressions {
 
   /** Register `graft_bpe_encode`. Idempotent. */
   def registerBpeEncode(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_bpe_encode",
-        arity("graft_bpe_encode", 2, 2)(exprs => BpeEncodeExpr(exprs(0), exprs(1))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_bpe_encode")(
+      arity("graft_bpe_encode", 2, 2)(exprs => BpeEncodeExpr(exprs(0), exprs(1))))
 
   /** array<int> greedy merge-encode of `text` against the rank-ordered
     * `merges` pair list (requires [[registerBpeEncode]]); an EMPTY
@@ -744,10 +730,8 @@ object TextExpressions {
 
   /** Register `graft_char_bigrams`. Idempotent. */
   def registerCharBigrams(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_char_bigrams",
-        arity("graft_char_bigrams", 1, 1)(exprs => CharBigrams(exprs(0))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_char_bigrams")(
+      arity("graft_char_bigrams", 1, 1)(exprs => CharBigrams(exprs(0))))
 
   /** array<string> consecutive code-point pairs (requires
     * [[registerCharBigrams]]). */
@@ -756,10 +740,8 @@ object TextExpressions {
 
   /** Register `graft_jaro_winkler`. Idempotent. */
   def registerJaroWinkler(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_jaro_winkler",
-        arity("graft_jaro_winkler", 2, 2)(exprs => JaroWinklerExpr(exprs(0), exprs(1))), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_jaro_winkler")(
+      arity("graft_jaro_winkler", 2, 2)(exprs => JaroWinklerExpr(exprs(0), exprs(1))))
 
   /** Jaro-Winkler similarity (requires [[registerJaroWinkler]]). */
   def jaroWinkler(a: Column, b: Column): Column =

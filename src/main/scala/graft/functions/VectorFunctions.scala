@@ -223,16 +223,14 @@ object VectorFunctions {
     * `graft_dequantize_vec` in the session's function registry so they
     * are callable from both the Column API and SQL. Idempotent. */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_quantize_vec",
-      exprs => QuantizeVec(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dequantize_vec",
-      exprs => DequantizeVec(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sign_bits",
-      exprs => SignBits(exprs(0), exprs(1)), "built-in")
+    NativeFunctions.registerOnce(spark, "graft_cosine")(
+      exprs => CosineSim(exprs(0), exprs(1)))
+    NativeFunctions.registerOnce(spark, "graft_quantize_vec")(
+      exprs => QuantizeVec(exprs(0)))
+    NativeFunctions.registerOnce(spark, "graft_dequantize_vec")(
+      exprs => DequantizeVec(exprs(0), exprs(1)))
+    NativeFunctions.registerOnce(spark, "graft_sign_bits")(
+      exprs => SignBits(exprs(0), exprs(1)))
   }
 
   /** Codegen'd cosine similarity column (requires [[register]] first). */

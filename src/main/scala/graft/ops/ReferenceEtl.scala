@@ -13,9 +13,22 @@ import graft.sources.LogSource
   * is byte-identical to `ETL_full_output/ETL_full.py:47-56,93-138`.
   *
   * Deliberate divergences from the reference (SURVEY.md §7.4), all
-  * flagged here: the pivot uses an EXPLICIT category list (static schema,
-  * kills the hidden distinct job, makes per-day unions alignable), and
-  * the scan declares its schema (no inference pass).
+  * flagged here:
+  *  - the pivot uses an EXPLICIT category list (static schema, kills the
+  *    hidden distinct job, makes per-day unions alignable);
+  *  - the scan declares its schema (no inference pass);
+  *  - the flagship runs as ONE conditional aggregation per contract
+  *    ([[ViewingCore.fullPipeline]]) instead of the reference's device
+  *    branch inner-joined to the category pivot (`ETL_full.py:74-90`),
+  *    so the day files are parsed once, not once per branch. The output
+  *    is row-for-row the same: `TotalDevices` counts every row,
+  *    Error rows included, as the pre-filter device branch does; a
+  *    contract is kept iff it has at least one valid row, which is
+  *    exactly when the pivot branch emits it and the join keeps it
+  *    (`"0"` and a null Contract never do); a category without valid
+  *    rows is 0, as `na.fill(0)` makes it. The two-branch shape stays
+  *    as [[ViewingCore.fullPipelineTwoBranch]], and ReferenceEtlSpec
+  *    checks the two against each other on generated rows.
   */
 object ReferenceEtl {
 
@@ -85,7 +98,8 @@ object ReferenceEtl {
 
   /** §3.2 ETL_process + OLAP_process — the flagship full pipeline from a
     * flattened log frame to the 10-column analytics row
-    * (`ETL_full_output/ETL_full.py:74-90,140-150`). */
+    * (`ETL_full_output/ETL_full.py:74-90,140-150`), planned as one
+    * scan and one shuffle (see the divergence list above). */
   def fullPipeline(flat: DataFrame): DataFrame =
     ViewingCore.fullPipeline(schema)(flat)
 

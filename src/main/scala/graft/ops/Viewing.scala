@@ -87,62 +87,28 @@ object Viewing {
   def pivotDurations(df: DataFrame, fillZero: Boolean = true): DataFrame =
     ViewingCore.pivotDurations(schema, fillZero)(df)
 
-  /** §3.2 flagship shape: two aggregate branches over one scan,
-    * re-converging in J1, then E4–E7 enrichment. */
+  /** §3.2 flagship in the reference's two-branch shape (two aggregate
+    * branches, re-converging in J1, then E4–E7 enrichment) — the
+    * reference-fidelity exhibit behind the `flagship_profile` query;
+    * see [[ViewingCore.fullPipelineTwoBranch]]. */
   def fullPipeline(events: DataFrame): DataFrame =
-    ViewingCore.fullPipeline(schema)(events)
+    ViewingCore.fullPipelineTwoBranch(schema)(events)
 
-  /** Single-pass flagship: same output as [[fullPipeline]], better plan.
-    * The faithful shape (two aggregate branches + join, reference
-    * `ETL_full.py:74-90`) scans the input twice and shuffles three times;
-    * here both branches fold into ONE conditional aggregation —
-    * one scan, one shuffle, no join. At 100 TB that is the difference
-    * between reading 200 TB + three exchanges and reading 100 TB + one.
-    *
-    * Equivalence: TotalDevices counts all rows pre-filter (faithful A2);
-    * a user joins iff the stats branch kept ≥1 valid row, reproduced by
-    * `n_valid > 0`; pivot cells for absent categories are null → 0 via
-    * coalesce, matching na.fill(0). Checked against the same oracle SQL
-    * as the faithful query. */
-  def fullPipelineFast(events: DataFrame): DataFrame =
-    profileFinalize(profileState(events))
+  /** Single-pass flagship: same output as [[fullPipeline]], one scan,
+    * one shuffle, no join — see [[ViewingCore.fullPipeline]] for the
+    * equivalence argument. Checked against the same oracle SQL as the
+    * two-branch query. */
+  def fullPipelineFast(events: DataFrame): DataFrame = ViewingCore.fullPipeline(schema)(events)
 
-  /** Mergeable per-user aggregation STATE of the flagship pipeline: the
-    * four per-category cent sums plus the device/valid row counts. Every
-    * cell is an associative sum/count, so states computed over disjoint
-    * event slices merge exactly via [[mergeProfileStates]] — the
-    * property that turns the flagship into an INCREMENTAL daily job at
-    * 100 TB: aggregate only the new day (tiny), merge with yesterday's
-    * state (per-user rows, orders of magnitude smaller than raw events),
-    * finalize. No history rescan, ever. */
-  def profileState(events: DataFrame): DataFrame = {
-    val cat = categorize(events).withColumn("vc", cents)
-    val valid = col("user_id") =!= 0 && col("Type") =!= "Error"
-    val catSums = categories.map(c =>
-      coalesce(sum(when(valid && col("Type") === c, col("vc"))), lit(0L)).as(c))
-    cat.groupBy("user_id").agg(
-      catSums.head,
-      catSums.tail :+ count(lit(1)).as("TotalDevices")
-        :+ count(when(valid, lit(1))).as("n_valid"): _*)
-  }
+  /** Mergeable per-user flagship state; see [[ViewingCore.profileState]]. */
+  def profileState(events: DataFrame): DataFrame = ViewingCore.profileState(schema)(events)
 
-  /** Merge two disjoint-slice states: per-user cell-wise sums. */
-  def mergeProfileStates(a: DataFrame, b: DataFrame): DataFrame = {
-    val cells = categories ++ Seq("TotalDevices", "n_valid")
-    a.unionByName(b).groupBy("user_id")
-      .agg(sum(cells.head).as(cells.head),
-        cells.tail.map(c => sum(c).as(c)): _*)
-  }
+  /** Merge two disjoint-slice states; see [[ViewingCore.mergeProfileStates]]. */
+  def mergeProfileStates(a: DataFrame, b: DataFrame): DataFrame =
+    ViewingCore.mergeProfileStates(schema)(a, b)
 
-  /** Finalize a state into the flagship output: drop users with no valid
-    * rows (join semantics of the faithful shape), then E4–E7 enrich. */
-  def profileFinalize(state: DataFrame): DataFrame = {
-    val joined = state
-      .filter(col("user_id") =!= 0 && col("n_valid") > 0)
-      .select(("user_id" +: categories :+ "TotalDevices").map(col): _*)
-    val enriched = Enrich.mostWatch(catLabels)(joined)
-    Enrich.activityLevel(categories)(Enrich.taste(catLabels)(enriched))
-  }
+  /** Finalize a state; see [[ViewingCore.profileFinalize]]. */
+  def profileFinalize(state: DataFrame): DataFrame = ViewingCore.profileFinalize(schema)(state)
 
   /** Incremental flagship: state over the history slice merged with
     * state over the new slice, finalized — hash-identical to the

@@ -99,10 +99,64 @@ object ViewingCore {
     if (fillZero) wide.na.fill(0) else wide
   }
 
-  /** §3.2 flagship shape: two aggregate branches over one scan
+  /** Mergeable per-id aggregation STATE of the §3.2 flagship: one
+    * conditional aggregation over the categorized rows that carries
+    * every pivot cell (the valid-row measure sum per category) plus
+    * the faithful A2 row count (`TotalDevices`, Error rows included)
+    * and the valid-row count `n_valid`. Every cell is an associative
+    * sum/count, so states over disjoint slices merge exactly via
+    * [[mergeProfileStates]] — aggregate only the new day, merge with
+    * yesterday's per-id state, finalize; no history rescan. */
+  def profileState(s: ViewingSchema)(df: DataFrame): DataFrame = {
+    val valid = s.validId(col(s.idCol)) && col("Type") =!= "Error"
+    val catSums = s.categories.map(c => coalesce(
+      sum(when(valid && col("Type") === c, col(s.measureName))), lit(0L)).as(c))
+    categorize(s)(df)
+      .select(col(s.idCol), col("Type"), s.measure.as(s.measureName))
+      .groupBy(s.idCol).agg(
+        catSums.head,
+        catSums.tail :+ count(lit(1)).as("TotalDevices")
+          :+ count(when(valid, lit(1))).as("n_valid"): _*)
+  }
+
+  /** Merge two disjoint-slice states: per-id cell-wise sums. */
+  def mergeProfileStates(s: ViewingSchema)(a: DataFrame, b: DataFrame): DataFrame = {
+    val cells = s.categories ++ Seq("TotalDevices", "n_valid")
+    a.unionByName(b).groupBy(s.idCol)
+      .agg(sum(cells.head).as(cells.head), cells.tail.map(c => sum(c).as(c)): _*)
+  }
+
+  /** Finalize a state into the flagship output: keep the ids with at
+    * least one valid row (the faithful shape's inner-join semantics),
+    * then the E4–E7 enrichment chain. */
+  def profileFinalize(s: ViewingSchema)(state: DataFrame): DataFrame =
+    enrich(s)(state.filter(col("n_valid") > 0)
+      .select((s.idCol +: s.categories :+ "TotalDevices").map(col): _*))
+
+  /** §3.2 flagship, single pass: [[profileFinalize]] of [[profileState]]
+    * — one scan, one shuffle, no join. Row-for-row the output of
+    * [[fullPipelineTwoBranch]], the reference's own shape:
+    *  - `TotalDevices` counts every row of the id, Error rows included,
+    *    exactly as the pre-filter device branch does;
+    *  - an id survives iff it has ≥1 valid row, which is when the
+    *    category branch emits it and the inner join keeps it (the
+    *    invalid-id sentinel and a null id never do: the sentinel
+    *    predicate is false or null on them);
+    *  - a category with no valid row sums to null → 0, as `na.fill(0)`;
+    *  - columns come out as id, categories, `TotalDevices`, enrichment.
+    * The two-branch form scans its input twice — once per branch, since
+    * the shared scan sits below two different aggregations — so on the
+    * reference's JSONL day files this halves the parse. */
+  def fullPipeline(s: ViewingSchema)(df: DataFrame): DataFrame =
+    profileFinalize(s)(profileState(s)(df))
+
+  /** §3.2 flagship in the reference's own shape
+    * (`ETL_full.py:74-90`): two aggregate branches over one input
     * (pre-filter device counts + valid-row category pivot),
-    * re-converging in J1, then the E4–E7 enrichment chain. */
-  def fullPipeline(s: ViewingSchema)(df: DataFrame): DataFrame = {
+    * re-converging in J1, then the E4–E7 enrichment chain. Kept as the
+    * reference-fidelity exhibit that [[fullPipeline]] is checked
+    * against; it plans two scans and a join. */
+  def fullPipelineTwoBranch(s: ViewingSchema)(df: DataFrame): DataFrame = {
     // projectDevice = false: the (id, device) projection is a no-op
     // under column pruning, and skipping it keeps the pipeline usable
     // on frames that carry no device column at all (the reference's
@@ -110,8 +164,11 @@ object ViewingCore {
     val devices = deviceCountsFaithful(s, projectDevice = false)(df)
     val stats =
       pivotDurations(s)(durationByCategory(s)(validRows(s)(categorize(s)(df))))
-    val joined = stats.join(devices, Seq(s.idCol), "inner")
-    val enriched = Enrich.mostWatch(s.catLabels)(joined)
-    Enrich.activityLevel(s.categories)(Enrich.taste(s.catLabels)(enriched))
+    enrich(s)(stats.join(devices, Seq(s.idCol), "inner"))
   }
+
+  /** E4–E7 — most-watched label, taste string, activity level. */
+  private def enrich(s: ViewingSchema)(df: DataFrame): DataFrame =
+    Enrich.activityLevel(s.categories)(
+      Enrich.taste(s.catLabels)(Enrich.mostWatch(s.catLabels)(df)))
 }

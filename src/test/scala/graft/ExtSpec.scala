@@ -2712,6 +2712,48 @@ class ExtSpec extends SparkSpec {
     eqBoth(withNullA, Seq((Some(1L), "a"), (None, "n")).toDF("k", "v"))
   }
 
+  test("multisetEq: a schema mismatch fails loudly; input columns never collide with its counts") {
+    import spark.implicits._
+    val eq = graft.analytics.ExtPipelines.multisetEq _
+    val base = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    // extra column, renamed column, retyped column: exceptAll refuses
+    // all three, and so must multisetEq
+    for (other <- Seq(
+        base.withColumn("x", lit(1)),
+        base.withColumnRenamed("v", "w"),
+        base.withColumn("k", col("k").cast("int")))) {
+      val err = intercept[IllegalArgumentException](eq(base, other))
+      assert(err.getMessage.contains("equal schemas"), err.getMessage)
+    }
+    // input columns named like the old fixed count columns compare as
+    // plain values
+    val a = Seq((1L, 5L), (1L, 5L)).toDF("__ca", "__cb")
+    assert(eq(a, a))
+    assert(!eq(a, Seq((1L, 5L), (2L, 5L)).toDF("__ca", "__cb")))
+    assert(!eq(a, a.limit(1)))
+  }
+
+  test("inParallel: every failing closure's cause reaches the caller") {
+    val first = new IllegalStateException("first staging failed")
+    val second = new java.io.IOException("second staging failed")
+    val ran = new java.util.concurrent.atomic.AtomicInteger
+    val err = intercept[IllegalStateException] {
+      graft.ext.IndexLayout.inParallel(Seq[() => Int](
+        () => { ran.incrementAndGet(); throw first },
+        () => { ran.incrementAndGet(); 1 },
+        () => { ran.incrementAndGet(); throw second }))
+    }
+    assert(err eq first)
+    assert(err.getSuppressed.toSeq == Seq(second))
+    assert(ran.get == 3)
+    // a lone failure carries nothing suppressed
+    val lone = new IllegalStateException("only failure")
+    val err2 = intercept[IllegalStateException] {
+      graft.ext.IndexLayout.inParallel(Seq[() => Int](() => 1, () => throw lone))
+    }
+    assert((err2 eq lone) && err2.getSuppressed.isEmpty)
+  }
+
   test("saveMinhashIndexFromFrames: a per-doc filter of shared frames equals a from-text build") {
     import spark.implicits._
     val corpus = docs.select("doc_id", "text").filter(col("doc_id") < 120)

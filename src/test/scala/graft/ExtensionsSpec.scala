@@ -140,6 +140,27 @@ class ExtensionsSpec extends SparkSpec {
     assert(messages(err).exists(_.contains("must not contain null")))
   }
 
+  test("register* is idempotent per session: a second call keeps the registered builder") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    def builders(names: Seq[String]) =
+      names.map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+    val names = Seq("graft_cosine", "graft_pq_adc", "graft_ngrams", "graft_jaro_winkler")
+    def registerAll(): Unit = {
+      VectorFunctions.register(spark)
+      graft.functions.PqExpressions.register(spark)
+      graft.functions.TextExpressions.registerNgrams(spark)
+      graft.functions.TextExpressions.registerJaroWinkler(spark)
+    }
+    registerAll()
+    val before = builders(names)
+    registerAll()
+    // the same builder objects: nothing was replaced, so the registry
+    // logged no "replaced a previously registered function" warning
+    assert(builders(names).zip(before).forall { case (a, b) => a eq b })
+  }
+
   test("GraftExtensions injects graft_cosine into a session extensions set") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw; builder registered

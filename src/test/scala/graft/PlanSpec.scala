@@ -80,6 +80,24 @@ class PlanSpec extends SparkSpec {
     assert(shuffles >= 2, s"expected >=2 shuffles, plan:\n$p")
   }
 
+  test("reference runFull: one JSON scan, one shuffle, no join") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-days")
+    for (day <- Seq("20220401", "20220402", "20220403")) {
+      val lines = Seq("C1" -> "VOD", "C2" -> "KPLUS", "0" -> "SPORT", "C1" -> "JUNK")
+        .zipWithIndex.map { case ((c, app), i) =>
+          s"""{"_index":"history","_type":"x","_id":"$day-$i","_score":0,""" +
+            s""""_source":{"Contract":"$c","Mac":"M$i","TotalDuration":${10 + i},"AppName":"$app"}}"""
+        }
+      java.nio.file.Files.write(dir.resolve(s"$day.json"),
+        lines.mkString("\n").getBytes("UTF-8"))
+    }
+    val p = plan(graft.ops.ReferenceEtl.runFull(spark, dir.toString, "20220401", "20220403"))
+    def occurrences(s: String) = p.sliding(s.length).count(_ == s)
+    assert(occurrences("FileScan json") == 1, s"expected one JSON scan, plan:\n$p")
+    assert(occurrences("Exchange hashpartitioning") == 1, s"expected 1 shuffle, plan:\n$p")
+    assert(!p.contains("Join"), s"expected no join, plan:\n$p")
+  }
+
   test("g20: bucketed agg+join plan has zero shuffle exchanges") {
     // both the groupBy key and the join key are the bucket key: the
     // storage is already hash-partitioned 8-ways on it, so the whole

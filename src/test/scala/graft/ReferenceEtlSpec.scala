@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Path}
 import scala.util.Random
 import org.apache.spark.sql.functions._
-import graft.ops.ReferenceEtl
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import graft.ops.{ReferenceEtl, ViewingCore}
 import graft.sources.{CsvSink, LogSource}
 
 /** Faithful-pipeline tests over synthetic reference-shaped JSONL
@@ -109,6 +110,43 @@ class ReferenceEtlSpec extends SparkSpec {
     val c2 = byC("C2")
     assert(c2.getAs[String]("most_watch") == "Thể thao")
     assert(c2.getAs[String]("Active_day") == "High")      // 1728000/86400 = 20 → High boundary
+  }
+
+  /** Edge rows every generated frame carries, whatever the generator drew. */
+  private val edgeRows: Seq[(Option[String], String, Option[Long], String)] = Seq(
+    (None, "M9", Some(10L), "KPLUS"),        // null Contract: never kept
+    (Some("0"), "M9", Some(20L), "KPlus"),   // sentinel: never kept
+    (Some("C1"), "M9", None, "KPLUS"),       // null duration on a valid row
+    (Some("ERR"), "M9", Some(30L), "kplus"), // ERR has only Error rows
+    (Some("ERR"), "M8", Some(40L), "JUNK"))
+
+  test("single-pass edge rows: only contracts with a valid row survive") {
+    import spark.implicits._
+    val out = ReferenceEtl.fullPipeline(
+      edgeRows.toDF("Contract", "Mac", "TotalDuration", "AppName")).collect()
+    assert(out.map(_.getAs[String]("Contract")).toSeq == Seq("C1"))
+    assert(out(0).getAs[Long]("TVDuration") == 0L)  // null sum → 0, as na.fill(0)
+    assert(out(0).getAs[Long]("TotalDevices") == 1L)
+  }
+
+  test("property: single-pass fullPipeline equals the two-branch composition") {
+    import spark.implicits._
+    val row = for {
+      c <- Gen.oneOf(None, Some("0"), Some("C1"), Some("C2"), Some("C3"), Some("C4"))
+      mac <- Gen.oneOf("M1", "M2", "M3")
+      dur <- Gen.frequency(1 -> Gen.const(None), 6 -> Gen.chooseNum(1L, 200000L).map(Some(_)))
+      // all 14 mapped codes (KPLUS and KPlus among them) plus unmapped ones
+      app <- Gen.oneOf(ReferenceEtl.schema.mapping.flatMap(_._1) ++ Seq("kplus", "JUNK"))
+    } yield (c, mac, dur, app)
+    val prop = Prop.forAll(Gen.listOf(row)) { rows =>
+      val df = (rows ++ edgeRows).toDF("Contract", "Mac", "TotalDuration", "AppName")
+      val one = ReferenceEtl.fullPipeline(df)
+      val two = ViewingCore.fullPipelineTwoBranch(ReferenceEtl.schema)(df)
+      one.columns.toSeq == two.columns.toSeq &&
+        one.exceptAll(two).isEmpty && two.exceptAll(one).isEmpty
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("E5 most_watch tie-break follows clause order Child→Movie→Relax→Sport→TV") {
