@@ -653,27 +653,6 @@ object Dedup {
     if (staged.nonEmpty) IndexLayout.commitAppend(spark, path, m, staged)
   }
 
-  /** Fold a [[graft.streaming.Streaming.nearDupIngestStream]] DELTA
-    * layout into the standing [[saveMinhashIndex]] index and CLEAR it
-    * — the scheduled compaction that closes the streaming ingest
-    * lifecycle (without it, delta batch directories accumulate and
-    * every micro-batch's standing union grows a file-listing term).
-    * The delta dirs already HOLD the admitted docs' index rows, so
-    * compaction moves rows, never re-derives them from text: each
-    * frame is read (minus its `batch` partition column), repartitioned
-    * on its partition key, and appended into the standing layout —
-    * O(deltas), standing data untouched. Afterwards the delta dirs are
-    * deleted so the next stream epoch starts empty.
-    *
-    * PRECONDITION — single-writer, drained stream: run only while the
-    * ingest stream is STOPPED after a clean drain (an AvailableNow
-    * `awaitTermination`, the nightly-compaction window). A delta dir
-    * from a killed, UNCOMMITTED batch would be folded into the
-    * standing index here, and the batch's replay would then find its
-    * own docs standing and reject them all. Kill-safety of the
-    * compaction itself follows [[appendToMinhashIndex]]'s contract:
-    * the append job is not atomic, so a failed compaction is re-run
-    * against a restored index. */
   /** The delta layout's bucket-count marker
     * (`<deltaPath>/_delta_buckets`): the stored count the epoch's
     * delta rows were bucketed under. [[graft.streaming.Streaming
@@ -733,6 +712,29 @@ object Dedup {
     }
   }
 
+  /** Fold a [[graft.streaming.Streaming.nearDupIngestStream]] DELTA
+    * layout into the standing [[saveMinhashIndex]] index and CLEAR it
+    * — the scheduled compaction that closes the streaming ingest
+    * lifecycle (without it, delta batch directories accumulate and
+    * every micro-batch's standing union grows a file-listing term).
+    * The delta dirs already HOLD the admitted docs' index rows, so
+    * compaction moves rows, never re-derives them from text: each
+    * frame is read (minus its `batch` partition column), repartitioned
+    * on its partition key, and appended into the standing layout —
+    * O(deltas), standing data untouched. Afterwards the delta dirs are
+    * deleted so the next stream epoch starts empty.
+    *
+    * PRECONDITION — single-writer, drained stream: run only while the
+    * ingest stream is STOPPED after a clean drain (an AvailableNow
+    * `awaitTermination`, the nightly-compaction window). A delta dir
+    * from a killed, UNCOMMITTED batch would be folded into the
+    * standing index here, and the batch's replay would then find its
+    * own docs standing and reject them all. Kill-safety: the fold is
+    * ONE committed append batch ([[appendToMinhashIndex]]'s contract),
+    * so a kill before its commit leaves nothing visible and the re-run
+    * replays it; a kill after the commit but before the delta dirs
+    * are cleared must NOT be re-run (it would fold the deltas twice) —
+    * delete the delta dirs instead. */
   def compactMinhashDeltas(spark: org.apache.spark.sql.SparkSession,
       deltaPath: String, path: String): Unit = {
     // leased: this verb commits an append into the standing layout —
@@ -782,37 +784,17 @@ object Dedup {
     }
   }
 
-  /** DELETE docs from a persisted [[saveMinhashIndex]] index — the
-    * merge-on-read half of removal (corpus refresh, takedowns,
-    * right-to-be-forgotten): the deleted ids are appended as a
-    * bucket-partitioned TOMBSTONE frame under `<path>/tombstones`, an
-    * O(delete-batch) write that never reads, lists, or rewrites the
-    * standing data. Probes honor tombstones at the CANDIDATE level
-    * ([[nearDupIngestFromFrames]] anti-joins the delta-sized candidate
-    * pairs against the tombstone ids), so serving cost gains no
-    * corpus-scale term: deleted docs' index rows still sit in storage
-    * until [[compactMinhashTombstones]] physically removes them, but
-    * they can never reject a batch doc — deletion is semantically
-    * immediate, physically deferred, the Iceberg/Delta delete-file
-    * discipline re-expressed for this layout.
-    *
-    * CONTRACT — id reuse: a standing tombstone shadows its id
-    * entirely, including rows APPENDED after the delete, so
-    * re-admitting a deleted id requires compacting first (document
-    * stores mint fresh ids instead; same answer as the delete-file
-    * systems). Repeated deletes of one id just accumulate harmless
-    * duplicate tombstone rows until compaction clears them. */
+  /** DELETE docs from a persisted [[saveMinhashIndex]] index
+    * ([[graft.ext.IndexLayout.deleteIds]]: merge-on-read tombstones,
+    * O(delete-batch), standing data untouched). Probes honor tombstones
+    * at the CANDIDATE level ([[nearDupIngestFromFrames]] anti-joins the
+    * delta-sized candidate pairs against the tombstone ids), so serving
+    * cost gains no corpus-scale term: a deleted doc can never reject a
+    * batch doc, though its rows stay in storage until
+    * [[compactMinhashTombstones]]. */
   def deleteFromMinhashIndex(ids: DataFrame, path: String,
-      idCol: String = "doc_id"): Unit = {
-    val spark = ids.sparkSession
-    // leased: a tombstone appended while a compaction is staging would
-    // be dropped by the flip WITHOUT being resolved — a silently
-    // undone delete, the worst failure a takedown pipeline can have
-    IndexLayout.withMaintenanceLease(spark, path) { _ =>
-      val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-      IndexLayout.appendTombstones(spark, path, m, ids, idCol)
-    }
-  }
+      idCol: String = "doc_id"): Unit =
+    IndexLayout.deleteIds(MinhashIndexFormat, ids, path, idCol)
 
   /** The standing tombstone ids of a [[saveMinhashIndex]] index, if
     * any ([[deleteFromMinhashIndex]] wrote some since the last
@@ -823,42 +805,36 @@ object Dedup {
     * one. */
   def loadMinhashTombstones(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "doc_id"): Option[DataFrame] =
-    IndexLayout.loadTombstones(spark, path,
-      IndexLayout.requireManifest(spark, path, MinhashIndexFormat), idCol)
+    IndexLayout.standingTombstones(spark, MinhashIndexFormat, path, idCol)
+
+  /** The MinHash family as the shared tombstone compaction sees it:
+    * `shingles`/`sizes` are bucket-partitioned by [[idBucket]], so the
+    * tombstoned ids name their affected buckets (≤ the manifest's
+    * `buckets`, a literal partition filter); `bands` has no
+    * id-derived partitioning (a doc's rows land in every `band=` dir)
+    * and is rewritten whole. */
+  private val MinhashFamily = IndexLayout.IndexFamily(MinhashIndexFormat,
+    _ => Seq(IndexLayout.CompactedFrame("shingles", "bucket"),
+      IndexLayout.CompactedFrame("sizes", "bucket"),
+      IndexLayout.CompactedFrame("bands", "band", whole = true)),
+    (_, path, m, tomb, idCol) => tomb
+      .select(idBucket(col(idCol), IndexLayout.intParam(m, path, "buckets")))
+      .distinct().collect().map(_.getInt(0)).toSeq) // ≤ buckets rows
 
   /** Physically remove tombstoned docs from a [[saveMinhashIndex]]
-    * layout and clear the tombstones — the scheduled compaction that
-    * closes [[deleteFromMinhashIndex]]'s merge-on-read lifecycle.
-    * Cost is PRUNED where the layout allows it:
-    *  - `shingles`/`sizes` are bucket-partitioned by [[idBucket]], and
-    *    tombstoned ids name their buckets — only AFFECTED buckets
-    *    (≤ the manifest's `buckets`, a literal partition filter) are
-    *    read, anti-joined, and rewritten into the next generation;
-    *    untouched buckets are never read, listed, or moved.
-    *  - `bands` has no id-derived partitioning (a doc's rows land in
-    *    every `band=` dir), so it is rewritten whole — the one
-    *    O(corpus) term, on the SMALLEST frame (a fixed `bands`
-    *    rows/doc of (id, band, sig) vs the shingle frame's ~|tokens|
-    *    string rows), amortized across every delete since the last
-    *    compaction.
-    * Readers stay LIVE throughout ([[graft.ext.IndexLayout]]'s
-    * generation discipline): survivors are staged into generation
-    * dirs nothing references yet, then ONE atomic manifest flip
-    * replaces the composition of all three frames and clears the
-    * tombstones together — a concurrent serve (batch or streaming
-    * micro-batch) reads exactly the pre- or post-compaction index,
-    * never a torn mix, and merge-on-read tombstones mean the deletion
-    * itself was already served before the compaction ran. The
-    * directories a flip retires are physically deleted only at the
-    * START of the next compaction, so a serve holding the old
-    * manifest keeps its files for one full compaction interval (the
-    * grace contract). Kill-safety: a compaction killed before its
-    * flip leaves the manifest unchanged and only orphaned staging
-    * dirs, which the re-run overwrites — single MAINTENANCE writer at
-    * a time, any number of readers. */
+    * layout and clear the tombstones
+    * ([[graft.ext.IndexLayout.compactTombstones]]). Only AFFECTED
+    * buckets of `shingles`/`sizes` are read, anti-joined and
+    * rewritten; `bands` is rewritten whole — the one O(corpus) term,
+    * on the SMALLEST frame (a fixed `bands` rows/doc of (id, band,
+    * sig) vs the shingle frame's ~|tokens| string rows), amortized
+    * across every delete since the last compaction. Readers stay live
+    * throughout: one atomic manifest flip replaces all three frames'
+    * compositions and clears the tombstones together. */
   def compactMinhashTombstones(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "doc_id"): Unit =
-    compactMinhash(spark, path, idCol, foldEvenClean = false)
+    IndexLayout.compactTombstones(spark, path, MinhashFamily, idCol,
+      fold = false)
 
   /** FOLD the composition of a [[saveMinhashIndex]] index even when no
     * tombstone exists — the maintenance verb for the APPEND-ONLY
@@ -874,62 +850,8 @@ object Dedup {
     * [[maintainMinhashIndex]]'s composition-length trigger. */
   def foldMinhashComposition(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "doc_id"): Unit =
-    compactMinhash(spark, path, idCol, foldEvenClean = true)
-
-  private def compactMinhash(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, foldEvenClean: Boolean): Unit = {
-    // leased across staging AND flip — the whole window in which a
-    // concurrent append/delete would be silently retired or dropped
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-      val tombStanding = IndexLayout.loadTombstones(spark, path, m, idCol)
-      // an empty tombstone set makes the pruned compaction a pure
-      // composition FOLD (nothing affected, nothing anti-joined away;
-      // split partitions — including every batch root — consolidate)
-      val tombForFold =
-        if (foldEvenClean && tombStanding.isEmpty)
-          Some(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              Seq(IndexLayout.frameSchema(m, "sizes")(idCol)))))
-        else tombStanding
-      tombForFold.foreach { tombRaw =>
-        val carried = IndexLayout.dropRetired(spark, path, m)
-        // the tombstone set feeds three anti-joins and a bucket-list
-        // aggregate; delta-sized, so one ckptLocal pins it for all four.
-        // try/finally: a compaction that fails mid-stage must not leak
-        // the pinned 2x-replicated blocks (the streaming-ingest leak
-        // class, closed the same way)
-        val tomb = Checkpoints.ckptLocal(tombRaw.distinct())
-        try {
-          val buckets = IndexLayout.intParam(m, path, "buckets")
-          val affected = tomb.select(idBucket(col(idCol), buckets).as("bk"))
-            .distinct()
-            .collect().map(_.getInt(0)).toSeq // ≤ buckets rows: bounded action
-          val newGen = IndexLayout.intParam(m, path, "gen") + 1
-          // the three frame stagings write disjoint newGen roots from
-          // one fixed manifest + the pinned tombstone set — independent
-          // jobs, overlapped so the verb costs ~the slowest staging
-          // instead of their sum (IndexLayout.inParallel)
-          val Seq(stShingles, stSizes, stBands) = IndexLayout.inParallel(Seq(
-            () => IndexLayout.stageCompactFrame(spark, path, m,
-              "shingles", "bucket", affected, tomb, idCol, newGen),
-            () => IndexLayout.stageCompactFrame(spark, path, m,
-              "sizes", "bucket", affected, tomb, idCol, newGen),
-            () => IndexLayout.stageRewriteFrame(spark, path, m,
-              "bands", "band", tomb, idCol, newGen)))
-          val staged = Map(
-            "shingles" -> stShingles,
-            "sizes" -> stSizes,
-            "bands" -> stBands,
-            "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones", newGen))
-          // heartbeat + still-the-owner assertion right before the commit
-          IndexLayout.renewLease(spark, path, lease)
-          IndexLayout.flip(spark, path, m, newGen, staged, carried)
-        } finally Checkpoints.free(tomb)
-      }
-    }
-  }
+    IndexLayout.compactTombstones(spark, path, MinhashFamily, idCol,
+      fold = true)
 
   /** REFRESH a persisted [[saveMinhashIndex]] index to the next corpus
     * epoch — the composite maintenance verb a living corpus runs after
@@ -1013,45 +935,36 @@ object Dedup {
   def rebucketMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, newBuckets: Int, idCol: String = "doc_id"): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = IndexLayout.requireManifest(spark, path, MinhashIndexFormat)
-      val carried = IndexLayout.dropRetired(spark, path, m)
-      val tombOpt = IndexLayout.loadTombstones(spark, path, m, idCol)
-        .map(t => Checkpoints.ckptLocal(t.distinct()))
-      try {
-        val newGen = IndexLayout.intParam(m, path, "gen") + 1
-        def rebucketFrame(name: String): (Seq[String], Seq[String]) = {
-          val newRoot = s"$name/g$newGen"
-          val base = IndexLayout.readFrame(spark, path, m, name)
-          val survivors = tombOpt match {
-            case Some(tomb) => base.join(tomb, Seq(idCol), "left_anti")
-            case None => base
+    IndexLayout.flipGeneration(spark, path, MinhashIndexFormat) { m =>
+      Some { newGen =>
+        IndexLayout.withPinnedIds(
+            IndexLayout.loadTombstones(spark, path, m, idCol)) { tombOpt =>
+          def rebucketFrame(name: String): (Seq[String], Seq[String]) = {
+            val base = IndexLayout.readFrame(spark, path, m, name)
+            val survivors = tombOpt match {
+              case Some(tomb) => base.join(tomb, Seq(idCol), "left_anti")
+              case None => base
+            }
+            survivors
+              .drop("bucket")
+              .withColumn("bucket", idBucket(col(idCol), newBuckets))
+              .repartition(col("bucket"))
+              .write.mode("overwrite") // staging replay is idempotent
+              .partitionBy("bucket")
+              .parquet(IndexLayout.genRoot(path, name, newGen))
+            IndexLayout.stageReplaceFrame(m, name, newGen)
           }
-          survivors
-            .drop("bucket")
-            .withColumn("bucket", idBucket(col(idCol), newBuckets))
-            .repartition(col("bucket"))
-            .write.mode("overwrite") // staging replay is idempotent
-            .partitionBy("bucket").parquet(s"$path/$newRoot")
-          (Seq(newRoot), IndexLayout.frameEntries(m, name))
+          // bands carries through untouched unless tombstones need
+          // resolving (the flip keeps every frame it is not handed)
+          IndexLayout.GenerationStage(
+            Map("shingles" -> rebucketFrame("shingles"),
+              "sizes" -> rebucketFrame("sizes")) ++
+              tombOpt.map(tomb => "bands" -> IndexLayout.stageRewriteFrame(
+                spark, path, m, "bands", "band", tomb, idCol, newGen)),
+            Map("buckets" -> newBuckets.toString),
+            resolvesTombstones = tombOpt.isDefined)
         }
-        val staged = Map(
-          "shingles" -> rebucketFrame("shingles"),
-          "sizes" -> rebucketFrame("sizes")) ++
-          (tombOpt match {
-            case Some(tomb) => Map(
-              "bands" -> IndexLayout.stageRewriteFrame(spark, path, m,
-                "bands", "band", tomb, idCol, newGen),
-              "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones",
-                newGen))
-            case None => Map(
-              "bands" -> IndexLayout.stageKeepFrame(m, "bands"),
-              "tombstones" -> IndexLayout.stageKeepFrame(m, "tombstones"))
-          })
-        IndexLayout.renewLease(spark, path, lease)
-        IndexLayout.flip(spark, path,
-          m + ("buckets" -> newBuckets.toString), newGen, staged, carried)
-      } finally tombOpt.foreach(Checkpoints.free)
+      }
     }
   }
 
@@ -1111,18 +1024,10 @@ object Dedup {
     val buckets = IndexLayout.intParam(m, path, "buckets")
     val sizes = IndexLayout.readFrame(spark, path, m, "sizes")
     val nRows = sizes.count()
-    // dead = tombstones that STRIKE an indexed row. Raw tombstone count
-    // would do: an idempotent takedown pipeline re-submitting its
-    // cumulative delete list re-appends ids a past compaction already
-    // removed (and may name ids never indexed) — counting those as
-    // backlog fires a whole-frame compaction every night with zero
-    // dead rows, and deflating `live` skews the rebucket sizing too.
-    // The semi-join broadcasts the delta-sized distinct tombstones
-    // against a one-column scan of the smallest per-doc frame.
-    val nDead = IndexLayout.loadTombstones(spark, path, m, idCol)
-      .map(t => sizes.select(col(idCol))
-        .join(broadcast(t.distinct()), Seq(idCol), "left_semi").count())
-      .getOrElse(0L)
+    // dead = tombstones that STRIKE an indexed row, counted against a
+    // one-column scan of the smallest per-doc frame (a raw count would
+    // also deflate `live` and skew the rebucket sizing)
+    val (nDead, _) = IndexLayout.deadRows(spark, path, m, sizes, idCol)
     val live = nRows - nDead
     val desired = math.max(1L, (live + targetDocsPerBucket - 1)
       / targetDocsPerBucket)
@@ -1254,30 +1159,6 @@ object Dedup {
     }
   }
 
-  /** Near-dup ingest against a standing corpus's MinHash index frames
-    * (in-memory from [[minhashIndexFrames]] or loaded from a
-    * [[saveMinhashIndex]] path — same code, so the two are identical
-    * by construction): admit the batch docs that are NOT Jaccard-≥
-    * `threshold` near-dups of any standing doc, and keep-first within
-    * the batch (the HIGHER id of any verified intra-batch pair is
-    * rejected, x2's rule). Candidates come from (band, sig) equi-joins
-    * — batch-signature-sized build sides, never all-pairs — and every
-    * rejection is VERIFIED with exact Jaccard over the shingle frames,
-    * so precision is exact and only candidate recall is probabilistic
-    * (1-(1-j^rows)^bands; identical docs always collide, so a true
-    * exact duplicate can never be admitted). Docs with fewer than n
-    * tokens carry no shingles and are admitted (no Jaccard evidence
-    * against them — mirrored by both paths).
-    *
-    * EAGER at the rejected-id set: the batch's shingle frame feeds
-    * four consumers (bands, sizes, both intersection joins), so it is
-    * persisted for the duration of the call — and the only way to
-    * release that cache deterministically instead of leaking one copy
-    * per invocation (the g33/x9 hygiene rule) is to materialize the
-    * DELTA-SIZED rejected-id set first (one [[Checkpoints.ckptLocal]],
-    * ≤ batch rows) and hand back a plan that reads only the batch and
-    * that checkpoint. The bounded eager action is the documented
-    * exception class (x26/g33). */
   /** Restrict a standing index frame to a candidate-id set (column
     * `b_id`), best available strategy first — factored out of
     * [[nearDupIngest]] so the plan shape is spec-pinnable:
@@ -1306,6 +1187,30 @@ object Dedup {
     base.join(probe, Seq("b_id"), "left_semi")
   }
 
+  /** Near-dup ingest against a standing corpus's MinHash index frames
+    * (in-memory from [[minhashIndexFrames]] or loaded from a
+    * [[saveMinhashIndex]] path — same code, so the two are identical
+    * by construction): admit the batch docs that are NOT Jaccard-≥
+    * `threshold` near-dups of any standing doc, and keep-first within
+    * the batch (the HIGHER id of any verified intra-batch pair is
+    * rejected, x2's rule). Candidates come from (band, sig) equi-joins
+    * — batch-signature-sized build sides, never all-pairs — and every
+    * rejection is VERIFIED with exact Jaccard over the shingle frames,
+    * so precision is exact and only candidate recall is probabilistic
+    * (1-(1-j^rows)^bands; identical docs always collide, so a true
+    * exact duplicate can never be admitted). Docs with fewer than n
+    * tokens carry no shingles and are admitted (no Jaccard evidence
+    * against them — mirrored by both paths).
+    *
+    * EAGER at the rejected-id set: the batch's shingle frame feeds
+    * four consumers (bands, sizes, both intersection joins), so it is
+    * persisted for the duration of the call — and the only way to
+    * release that cache deterministically instead of leaking one copy
+    * per invocation (the g33/x9 hygiene rule) is to materialize the
+    * DELTA-SIZED rejected-id set first (one [[Checkpoints.ckptLocal]],
+    * ≤ batch rows) and hand back a plan that reads only the batch and
+    * that checkpoint. The bounded eager action is the documented
+    * exception class (x26/g33). */
   def nearDupIngest(standingBands: DataFrame, standingShingles: DataFrame,
       standingSizes: DataFrame, batch: DataFrame, n: Int = 3,
       threshold: Double = 0.5, numHashes: Int = 16, bands: Int = 8,

@@ -958,8 +958,8 @@ private[graft] object IndexLayout {
   }
 
   // ---------------------------------------------------------------
-  // compaction staging (no manifest writes here — the orchestrating
-  // family verb stages every frame, then flips ONCE)
+  // compaction staging (no manifest writes here — a flipGeneration
+  // stage closure stages every frame, then the protocol flips ONCE)
   // ---------------------------------------------------------------
 
   /** On-disk `partCol=v` directory names directly under `absDir`.
@@ -1093,27 +1093,35 @@ private[graft] object IndexLayout {
       m: Map[String, String], name: String, partCol: String,
       tomb: DataFrame, idCol: String, newGen: Int)
       : (Seq[String], Seq[String]) = {
-    val newRoot = s"$name/g$newGen"
     val groups = readFrameGroups(spark, path, m, name)
     if (groups.nonEmpty)
       groups.reduce(_.union(_))
         .join(tomb.select(col(idCol)), Seq(idCol), "left_anti")
         .repartition(col(partCol))
         .write.mode("overwrite")
-        .partitionBy(partCol).parquet(s"$path/$newRoot")
-    (Seq(newRoot), frameEntries(m, name))
+        .partitionBy(partCol).parquet(genRoot(path, name, newGen))
+    stageReplaceFrame(m, name, newGen)
   }
 
-  /** Stage a frame DROP: all current entries retire and a fresh empty
-    * open root takes over (how a compaction clears the tombstones it
-    * just resolved). */
-  def stageDropFrame(m: Map[String, String], name: String, newGen: Int)
+  /** Stage a whole-frame REPLACEMENT: every current entry retires and
+    * the single root `name/g<newGen>` takes over — holding what the
+    * caller wrote there, or nothing (how a flip clears the tombstones
+    * it resolved). */
+  def stageReplaceFrame(m: Map[String, String], name: String, newGen: Int)
       : (Seq[String], Seq[String]) =
     (Seq(s"$name/g$newGen"), frameEntries(m, name))
 
-  /** Carry a frame UNCHANGED through a flip (e.g. IVF centroids). */
-  def stageKeepFrame(m: Map[String, String], name: String)
-      : (Seq[String], Seq[String]) = (frameEntries(m, name), Seq.empty)
+  /** The daemon pool behind [[inParallel]]: cached, so threads are
+    * reused across calls (a streaming ingest calls it every
+    * micro-batch) and grow with nested calls instead of deadlocking. */
+  private lazy val parallelPool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, s"graft-inParallel-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
 
   /** Run INDEPENDENT per-frame staging closures concurrently on the
     * shared session. A maintenance verb stages each of its frames into
@@ -1139,34 +1147,43 @@ private[graft] object IndexLayout {
     * data the re-run's flip then commits). Awaiting all stagings means
     * no writer of this verb survives the call, so the manifest is
     * untouched and a re-run after failure sees only quiescent,
-    * unreferenced staging directories it fully overwrites. FutureTask
-    * completes exceptionally on ANY Throwable (not just NonFatal), so
-    * a fatal error (OOM, StackOverflowError) in a closure surfaces
-    * instead of hanging the awaiting driver thread forever. */
+    * unreferenced staging directories it fully overwrites. An async
+    * CompletableFuture completes exceptionally on ANY Throwable (not
+    * just NonFatal), so a fatal error (OOM, StackOverflowError) in a
+    * closure surfaces instead of hanging the awaiting driver thread
+    * forever.
+    *
+    * Spark local properties (job tags, job group, the SQL execution
+    * id) are inherited only when a thread is CREATED, so a reused pool
+    * thread would carry whatever an earlier caller had set: every
+    * closure runs with the CALLER's properties and active session,
+    * captured at submission (`SQLExecution.withThreadLocalCaptured`). */
   private[graft] def inParallel[A](fs: Seq[() => A]): Seq[A] =
     if (fs.lengthCompare(1) <= 0) fs.map(_())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
-      try {
-        val futures = fs.map { f =>
-          pool.submit(new java.util.concurrent.Callable[A] {
-            def call(): A = f()
-          })
+      val session = org.apache.spark.sql.classic.SparkSession.getActiveSession
+        .orElse(org.apache.spark.sql.classic.SparkSession.getDefaultSession)
+      val futures = fs.map { f =>
+        session match {
+          case Some(s) => org.apache.spark.sql.execution.SQLExecution
+            .withThreadLocalCaptured(s, parallelPool)(f())
+          case None => java.util.concurrent.CompletableFuture
+            .supplyAsync(() => f(), parallelPool)
         }
-        // each get() blocks until ITS task finishes — iterating them all
-        // awaits every staging, whatever failed in between
-        val outcomes = futures.map(fu => scala.util.Try(fu.get()))
-        val failures = outcomes.collect {
-          case scala.util.Failure(e: java.util.concurrent.ExecutionException)
-            if e.getCause != null => e.getCause
-          case scala.util.Failure(e) => e
-        }
-        failures.headOption.foreach { first =>
-          failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
-          throw first
-        }
-        outcomes.map(_.get)
-      } finally pool.shutdown()
+      }
+      // each get() blocks until ITS task finishes — iterating them all
+      // awaits every staging, whatever failed in between
+      val outcomes = futures.map(fu => scala.util.Try(fu.get()))
+      val failures = outcomes.collect {
+        case scala.util.Failure(e: java.util.concurrent.ExecutionException)
+          if e.getCause != null => e.getCause
+        case scala.util.Failure(e) => e
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+      outcomes.map(_.get)
     }
 
   /** Session conf key for the MINIMUM AGE (milliseconds) a retired
@@ -1204,7 +1221,7 @@ private[graft] object IndexLayout {
     *
     * @return the retired entries still inside the grace window, for
     *         the closing flip to carry forward. */
-  def dropRetired(spark: SparkSession, path: String,
+  private def dropRetired(spark: SparkSession, path: String,
       m: Map[String, String]): Seq[(String, Long)] = {
     val minAge = spark.conf.getOption(RetiredGraceConfKey).map(_.toLong)
       .getOrElse(0L)
@@ -1264,9 +1281,9 @@ private[graft] object IndexLayout {
     * retired directories — stamped with the flip time — plus any
     * grace-retained entries [[dropRetired]] carried forward, for a
     * later compaction's [[dropRetired]]. */
-  def flip(spark: SparkSession, path: String, m: Map[String, String],
+  private def flip(spark: SparkSession, path: String, m: Map[String, String],
       newGen: Int, staged: Map[String, (Seq[String], Seq[String])],
-      carriedRetired: Seq[(String, Long)] = Seq.empty): Unit = {
+      carriedRetired: Seq[(String, Long)]): Unit = {
     val now = System.currentTimeMillis()
     // phantom filter: an open generation root nothing was ever written
     // to (appends land in their own batch roots, so e.g. a tombstone
@@ -1287,6 +1304,49 @@ private[graft] object IndexLayout {
         "retiredAt" -> joinEntries(allRetired.map(_._2.toString)))
     writeManifest(spark, path, updated)
   }
+
+  /** What one [[flipGeneration]] commits: each staged frame's (new
+    * composition, retired entries), the layout-parameter updates
+    * (`buckets`, `nList`, `trainOcc`), and whether the staged rows
+    * have the standing tombstones resolved — then the flip swaps the
+    * tombstone frame for a fresh empty open root. Frames absent from
+    * `frames` carry through the flip unchanged. */
+  final case class GenerationStage(
+      frames: Map[String, (Seq[String], Seq[String])],
+      params: Map[String, String] = Map.empty,
+      resolvesTombstones: Boolean = false)
+
+  /** THE generation-flip protocol every compaction-shaped verb of every
+    * family runs (tombstone compaction, fold, rebucket, retrain,
+    * sketch retention): under the maintenance lease, resolve the
+    * manifest of `format` and hand it to `plan`. None commits nothing
+    * and deletes nothing. Some(stage): delete the directories earlier
+    * flips retired ([[dropRetired]]), run `stage(gen + 1)` — it writes
+    * only into directories no manifest references yet — then renew
+    * the lease (heartbeat plus a still-the-owner check right before
+    * the commit) and [[flip]] once.
+    *
+    * Kill-safety is the protocol's, not each verb's: a `stage` that
+    * throws (or a killed driver) leaves the manifest's seq, gen and
+    * retired list untouched and only unreferenced staging behind,
+    * which the re-run overwrites; the lease is released in either
+    * case. */
+  def flipGeneration(spark: SparkSession, path: String, format: String)
+      (plan: Map[String, String] => Option[Int => GenerationStage]): Unit =
+    withMaintenanceLease(spark, path) { lease =>
+      val m = requireManifest(spark, path, format)
+      plan(m).foreach { stage =>
+        val carried = dropRetired(spark, path, m)
+        val newGen = intParam(m, path, "gen") + 1
+        val s = stage(newGen)
+        val cleared =
+          if (s.resolvesTombstones && m.contains("frames.tombstones"))
+            Map("tombstones" -> stageReplaceFrame(m, "tombstones", newGen))
+          else Map.empty
+        renewLease(spark, path, lease)
+        flip(spark, path, m ++ s.params, newGen, s.frames ++ cleared, carried)
+      }
+    }
 
   // ---------------------------------------------------------------
   // tombstones (shared by both families)
@@ -1317,6 +1377,133 @@ private[graft] object IndexLayout {
       m: Map[String, String], idCol: String): Option[DataFrame] =
     readFrameGroups(spark, path, m, "tombstones").reduceOption(_.union(_))
       .map(_.select(col(idCol)))
+
+  /** DELETE ids from a persisted index of `format` (either family) —
+    * the merge-on-read half of removal (corpus refresh, takedowns,
+    * right-to-be-forgotten). The distinct ids are staged UNPARTITIONED
+    * into the fresh batch root `<path>/tombstones/a<nextSeq>` and made
+    * visible by one manifest commit ([[appendTombstones]]): an
+    * O(delete-batch) write that never reads, lists or rewrites the
+    * standing data, and an EMPTY id set commits nothing at all. Serves
+    * strike tombstoned ids from then on — deletion is semantically
+    * immediate — while their rows stay in storage until the family's
+    * tombstone compaction ([[compactTombstones]]) removes them
+    * physically and clears the tombstones at its flip: the
+    * Iceberg/Delta delete-file discipline on this layout.
+    *
+    * Leased: a tombstone appended while a compaction is staging would
+    * be dropped by its flip WITHOUT being resolved — a silently undone
+    * delete, the worst failure a takedown pipeline can have.
+    *
+    * CONTRACT — id reuse: a standing tombstone shadows its id entirely,
+    * including rows APPENDED after the delete, so re-admitting a
+    * deleted id requires compacting first (or minting fresh ids).
+    * Repeated deletes of one id accumulate harmless duplicate tombstone
+    * rows until the compaction clears them. */
+  def deleteIds(format: String, ids: DataFrame, path: String,
+      idCol: String): Unit = {
+    val spark = ids.sparkSession
+    withMaintenanceLease(spark, path) { _ =>
+      appendTombstones(spark, path, requireManifest(spark, path, format),
+        ids, idCol)
+    }
+  }
+
+  /** [[loadTombstones]] of the head manifest of an index of `format`. */
+  def standingTombstones(spark: SparkSession, format: String, path: String,
+      idCol: String): Option[DataFrame] =
+    loadTombstones(spark, path, requireManifest(spark, path, format), idCol)
+
+  /** An empty id set typed by frame `name`'s `idCol` — the tombstone set
+    * of a pure composition fold. */
+  def emptyIds(spark: SparkSession, m: Map[String, String], name: String,
+      idCol: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(frameSchema(m, name)(idCol))))
+
+  /** Run `body` over `ids` made distinct and PINNED with one
+    * [[Checkpoints.ckptLocal]]: a tombstone set feeds several
+    * anti-joins and an affected-partition discovery, and it is
+    * delta-sized. Freed even when `body` throws, so a staging that
+    * fails leaks no 2x-replicated blocks. */
+  private[graft] def withPinnedIds[T](ids: Option[DataFrame])
+      (body: Option[DataFrame] => T): T = {
+    val pinned = ids.map(t => Checkpoints.ckptLocal(t.distinct()))
+    try body(pinned) finally pinned.foreach(Checkpoints.free)
+  }
+
+  /** One frame a tombstone compaction stages, partitioned by `partCol`:
+    * pruned to the affected partitions ([[stageCompactFrame]]) or, when
+    * `whole`, rewritten entirely ([[stageRewriteFrame]] — the MinHash
+    * `bands` frame, whose `band` partitioning says nothing about ids). */
+  private[graft] final case class CompactedFrame(name: String,
+      partCol: String, whole: Boolean = false)
+
+  /** What the shared tombstone compaction needs to know about one index
+    * family: its manifest `format`, the frames a given manifest stages
+    * (IVF stages `fp` only when quantized; frames not listed — IVF
+    * `centroids` and `codebook` — carry through the flip unchanged),
+    * and the discovery of the partitions the pinned tombstone ids
+    * (`tomb`, column `idCol`) touch. */
+  private[graft] final case class IndexFamily(format: String,
+      frames: Map[String, String] => Seq[CompactedFrame],
+      affected: (SparkSession, String, Map[String, String], DataFrame, String)
+        => Seq[Any])
+
+  /** Physically remove tombstoned rows and clear the tombstones — the
+    * compaction closing [[deleteIds]]' merge-on-read lifecycle, for
+    * every family `fam` describes. Cost is PRUNED where the layout
+    * allows: only partitions the tombstoned ids touch are read,
+    * anti-joined and rewritten into the next generation (plus every
+    * partition split across entries or living under a batch root —
+    * [[stageCompactFrame]]'s fold); untouched partitions are never
+    * read, listed or moved. The frames stage concurrently
+    * ([[inParallel]]): disjoint new-generation roots from one fixed
+    * manifest and one pinned tombstone set.
+    *
+    * With no standing tombstones it commits nothing and deletes
+    * nothing — unless `fold`, which runs the same compaction over an
+    * empty tombstone set: the append-only lifecycle's composition fold
+    * (batch roots consolidate, entries return to ≤ partitions + 1 per
+    * frame). Readers stay lock-free and kill-safety is
+    * [[flipGeneration]]'s. */
+  private[graft] def compactTombstones(spark: SparkSession, path: String,
+      fam: IndexFamily, idCol: String, fold: Boolean): Unit =
+    flipGeneration(spark, path, fam.format) { m =>
+      val standing = loadTombstones(spark, path, m, idCol)
+      if (standing.isEmpty && !fold) None
+      else Some { newGen =>
+        withPinnedIds(standing) { pinned =>
+          val frames = fam.frames(m)
+          val tomb = pinned.getOrElse(emptyIds(spark, m, frames.head.name, idCol))
+          val affected = fam.affected(spark, path, m, tomb, idCol)
+          val staged = inParallel(frames.map { f => () =>
+            f.name -> (
+              if (f.whole) stageRewriteFrame(spark, path, m, f.name,
+                f.partCol, tomb, idCol, newGen)
+              else stageCompactFrame(spark, path, m, f.name, f.partCol,
+                affected, tomb, idCol, newGen))
+          })
+          GenerationStage(staged.toMap, resolvesTombstones = true)
+        }
+      }
+    }
+
+  /** The autopilots' dead-row count: standing tombstones that STRIKE a
+    * row of `rows` (a per-doc frame), semi-join counted against the
+    * broadcast distinct tombstone set — returned too, for the caller's
+    * own anti-joins. A raw tombstone count would not do: an idempotent
+    * takedown pipeline re-submitting its cumulative delete list
+    * re-appends ids a past compaction already removed (and may name
+    * ids never indexed), and counting those as backlog would fire a
+    * compaction every night against zero dead rows. */
+  def deadRows(spark: SparkSession, path: String, m: Map[String, String],
+      rows: DataFrame, idCol: String): (Long, Option[DataFrame]) = {
+    val tomb = loadTombstones(spark, path, m, idCol)
+      .map(t => org.apache.spark.sql.functions.broadcast(t.distinct()))
+    (tomb.map(t => rows.select(col(idCol)).join(t, Seq(idCol), "left_semi")
+      .count()).getOrElse(0L), tomb)
+  }
 
   /** One frame's health line in an [[describeIndex]] report. */
   final case class FrameInfo(name: String, nEntries: Int)

@@ -899,35 +899,16 @@ object Similarity {
       vecCol, idCol)
   }
 
-  /** DELETE vectors from a [[saveIvfIndex]] layout — the x26d
-    * discipline applied to the vector index: deleted ids append to an
-    * O(delete)-cost `<path>/tombstones` frame (standing lists never
-    * read or rewritten), [[ivfTopKFromIndex]] strikes tombstoned
-    * candidates after the probe join (deletion is semantically
-    * immediate; a freed top-k slot goes to the next-best neighbor),
-    * and [[compactIvfTombstones]] later removes the rows physically.
-    * Same id-reuse contract as the MinHash tombstones: a standing
-    * tombstone shadows its id even across later appends — compact
-    * before re-admitting an id, or mint fresh ids.
-    *
-    * An EMPTY ids frame writes nothing: unlike the MinHash tombstones
-    * (whose bucket-PARTITIONED empty write leaves no footer), an
-    * unpartitioned empty write emits one schema-anchor footer, which
-    * would read back as standing-tombstones-present and tax every
-    * later serve with a pointless anti-join stage (and every refresh
-    * with a pointless compaction). The emptiness probe is one job over
-    * the delta-sized delete set. */
+  /** DELETE vectors from a [[saveIvfIndex]] layout
+    * ([[graft.ext.IndexLayout.deleteIds]]: merge-on-read tombstones,
+    * standing lists never read or rewritten). [[ivfTopKFromIndex]]
+    * strikes tombstoned candidates after the probe join, so deletion is
+    * semantically immediate and a freed top-k slot goes to the
+    * next-best neighbor; [[compactIvfTombstones]] later removes the
+    * rows physically. */
   def deleteFromIvfIndex(ids: DataFrame, path: String,
-      idCol: String = "vec_id"): Unit = {
-    val spark = ids.sparkSession
-    // leased: a tombstone appended while a compaction is staging would
-    // be dropped by the flip WITHOUT being resolved — a silently
-    // undone delete (see deleteFromMinhashIndex)
-    IndexLayout.withMaintenanceLease(spark, path) { _ =>
-      val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
-      IndexLayout.appendTombstones(spark, path, m, ids, idCol)
-    }
-  }
+      idCol: String = "vec_id"): Unit =
+    IndexLayout.deleteIds(IvfIndexFormat, ids, path, idCol)
 
   /** The standing tombstone ids of a [[saveIvfIndex]] index, if any
     * (None once [[compactIvfTombstones]] has cleared them — the
@@ -936,30 +917,38 @@ object Similarity {
     * index honors its tombstones exactly like a local one. */
   def loadIvfTombstones(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "vec_id"): Option[DataFrame] =
-    IndexLayout.loadTombstones(spark, path,
-      IndexLayout.requireManifest(spark, path, IvfIndexFormat), idCol)
+    IndexLayout.standingTombstones(spark, IvfIndexFormat, path, idCol)
+
+  /** The IVF family as the shared tombstone compaction sees it: the
+    * lists are partitioned by `list_id`, not by id, so affected lists
+    * are DISCOVERED with a column-pruned scan of (id, list_id) — one
+    * slim column plus free partition metadata, no embedding bytes. A
+    * quantized layout (int8 / pq, one `storage` parameter that serve
+    * and append read too) also compacts its parallel full-precision
+    * `fp` frame over the same lists; the centroids and the pq codebook
+    * — both quantizers immutable after build — carry through every
+    * flip untouched. */
+  private val IvfFamily = IndexLayout.IndexFamily(IvfIndexFormat,
+    m => IndexLayout.CompactedFrame("lists", "list_id") +:
+      (if (m.getOrElse("storage", "fp") == "fp") Seq.empty
+       else Seq(IndexLayout.CompactedFrame("fp", "list_id"))),
+    (spark, path, m, tomb, idCol) =>
+      IndexLayout.readFrame(spark, path, m, "lists")
+        .select(col(idCol), col("list_id"))
+        .join(tomb, Seq(idCol), "left_semi")
+        .select("list_id").distinct()
+        .collect().map(_.get(0)).toSeq) // ≤ nList rows: bounded
 
   /** Physically remove tombstoned vectors from a [[saveIvfIndex]]
-    * layout and clear the tombstones. The lists are partitioned by
-    * `list_id`, not by id, so affected lists are DISCOVERED first with
-    * a column-pruned scan of (id, list_id) — ids are one slim column
-    * and list_id is free partition metadata, so the discovery reads no
-    * embedding bytes — and only those ≤ nList partitions are then
-    * read, anti-joined, and rewritten into the next generation;
-    * untouched lists are never read, listed, or moved. Readers stay
-    * LIVE throughout: one atomic manifest flip replaces the list
-    * composition and clears the tombstones together, directories the
-    * flip retired are deleted only at the start of the NEXT compaction
-    * (the [[graft.ext.IndexLayout]] grace contract), and the stored
-    * centroids — the quantizer — carry through every flip unchanged.
-    * Same kill-safety as [[graft.ext.Dedup.compactMinhashTombstones]]:
-    * a kill before the flip leaves the manifest unchanged and only
-    * overwrite-idempotent staging dirs. Single MAINTENANCE writer at a
-    * time; merge-on-read tombstones mean the deletion itself was
-    * already served before any compaction ran. */
+    * layout and clear the tombstones
+    * ([[graft.ext.IndexLayout.compactTombstones]]): only the affected
+    * lists are read, anti-joined and rewritten into the next
+    * generation; untouched lists are never read, listed or moved, and
+    * readers stay live throughout. */
   def compactIvfTombstones(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "vec_id"): Unit =
-    compactIvf(spark, path, idCol, foldEvenClean = false)
+    IndexLayout.compactTombstones(spark, path, IvfFamily, idCol,
+      fold = false)
 
   /** FOLD the composition of a [[saveIvfIndex]] index even when no
     * tombstone exists — [[graft.ext.Dedup.foldMinhashComposition]]'s
@@ -971,70 +960,8 @@ object Similarity {
     * fired by [[maintainIvfIndex]]'s composition-length trigger. */
   def foldIvfComposition(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String = "vec_id"): Unit =
-    compactIvf(spark, path, idCol, foldEvenClean = true)
-
-  private def compactIvf(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, foldEvenClean: Boolean): Unit = {
-    // leased across staging AND flip — the whole window in which a
-    // concurrent append/delete would be silently retired or dropped
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
-      val tombStanding = IndexLayout.loadTombstones(spark, path, m, idCol)
-      // empty tombstones make the pruned compaction a pure composition
-      // FOLD: nothing anti-joined away, batch roots consolidate
-      val tombForFold =
-        if (foldEvenClean && tombStanding.isEmpty)
-          Some(spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(
-              Seq(IndexLayout.frameSchema(m, "lists")(idCol)))))
-        else tombStanding
-      tombForFold.foreach { tombRaw =>
-        val carried = IndexLayout.dropRetired(spark, path, m)
-        val tomb = Checkpoints.ckptLocal(tombRaw.distinct())
-        // try/finally: a compaction that fails mid-stage must not leak
-        // the pinned 2x-replicated tombstone blocks (the streaming-ingest
-        // leak class, closed the same way)
-        try {
-          val affected = IndexLayout.readFrame(spark, path, m, "lists")
-            .select(col(idCol), col("list_id"))
-            .join(tomb, Seq(idCol), "left_semi")
-            .select("list_id").distinct()
-            .collect().map(_.get(0)).toSeq // ≤ nList rows: bounded
-          val newGen = IndexLayout.intParam(m, path, "gen") + 1
-          // the lists staging and (for quantized layouts) the parallel
-          // fp staging write disjoint newGen roots from one fixed
-          // manifest — overlapped via IndexLayout.inParallel below
-          val quantized = m.getOrElse("storage", "fp") != "fp"
-          val framesStaged = IndexLayout.inParallel(
-            Seq(() => IndexLayout.stageCompactFrame(spark, path, m,
-              "lists", "list_id", affected, tomb, idCol, newGen)) ++
-            (if (quantized)
-              Seq(() => IndexLayout.stageCompactFrame(spark, path, m,
-                "fp", "list_id", affected, tomb, idCol, newGen))
-             else Seq.empty))
-          val staged = Map(
-            "lists" -> framesStaged.head,
-            "centroids" -> IndexLayout.stageKeepFrame(m, "centroids"),
-            "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones", newGen)) ++
-            // a quantized layout (int8 / pq) carries the parallel
-            // full-precision frame — compacted with the same affected
-            // lists and the same flip (staged above, concurrently with
-            // the lists). Gated on the SAME storage
-            // parameter serve and append read (one source of truth); a
-            // manifest claiming a quantized storage without a stored fp
-            // schema fails loudly inside the staging read. The pq
-            // codebook frame, like the centroids, carries through every
-            // flip untouched (both quantizers are immutable after
-            // build).
-            (if (quantized) Map("fp" -> framesStaged(1)) else Map.empty)
-          // heartbeat + still-the-owner assertion right before the commit
-          IndexLayout.renewLease(spark, path, lease)
-          IndexLayout.flip(spark, path, m, newGen, staged, carried)
-        } finally Checkpoints.free(tomb)
-      }
-    }
-  }
+    IndexLayout.compactTombstones(spark, path, IvfFamily, idCol,
+      fold = true)
 
   /** REFRESH a persisted [[saveIvfIndex]] index to the next corpus
     * epoch — [[graft.ext.Dedup.refreshMinhashIndex]]'s composite on
@@ -1061,6 +988,45 @@ object Similarity {
     deleteFromIvfIndex(deletedIds, path, idCol)
     compactIvfTombstones(spark, path, idCol)
     appendToIvfIndex(spark, path, admittedVecs, vecCol, idCol)
+  }
+
+  /** Per-list row counts of a just-written lists directory, as the
+    * nList-bounded `trainOcc` manifest CSV ("list:count", sorted) —
+    * the TRAIN-TIME occupancy every build/retrain stores so the
+    * autopilot's imbalance trigger has an exact baseline: on an
+    * untouched index TV(live, trainOcc) = 0 BY CONSTRUCTION, so the
+    * no-fire side of the trigger needs no data-dependent margin. */
+  private def trainOccCsv(spark: org.apache.spark.sql.SparkSession,
+      listsDir: String): String =
+    spark.read.parquet(listsDir)
+      .groupBy(col("list_id").cast("long").as("l"))
+      .agg(count(lit(1)).as("c"))
+      .collect().map(r => s"${r.getLong(0)}:${r.getLong(1)}")
+      .sorted.mkString(",")
+
+  private[graft] def parseOcc(csv: String): Map[Long, Long] =
+    csv.split(",").filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf(':')
+      kv.substring(0, i).toLong -> kv.substring(i + 1).toLong
+    }.toMap
+
+  /** µ-ized total variation between two list-occupancy histograms,
+    * EXACT-INTEGER end to end: TV = Σ_l |a_l·n_b − b_l·n_a| / (2·n_a·n_b)
+    * by cross-multiplication in BigInt (per-list products overflow Long
+    * at production corpus sizes), and the final µ value is the
+    * round-half-up integer ((num·2,000,000 + den) div (2·den)) — no
+    * double division anywhere, so the only rounding is the declared µ
+    * quantization and a threshold compare can never flip on a ±1 ulp. */
+  private[graft] def occTvMu(a: Map[Long, Long], b: Map[Long, Long]): Long = {
+    val na = a.values.foldLeft(BigInt(0))(_ + _)
+    val nb = b.values.foldLeft(BigInt(0))(_ + _)
+    require(na > 0 && nb > 0,
+      s"occTvMu: empty occupancy histogram (na=$na, nb=$nb)")
+    val num = (a.keySet ++ b.keySet).toSeq.map(l =>
+      (BigInt(a.getOrElse(l, 0L)) * nb - BigInt(b.getOrElse(l, 0L)) * na).abs)
+      .foldLeft(BigInt(0))(_ + _)
+    val den = BigInt(2) * na * nb
+    ((num * 2000000 + den) / (den * 2)).toLong
   }
 
   /** RETRAIN a persisted [[saveIvfIndex]] index's coarse quantizer IN
@@ -1109,53 +1075,12 @@ object Similarity {
     * nList, nIters, storage)` build — both quantizer trainings see the
     * identical survivor multiset and both are deterministic, so the
     * layouts agree row-for-row. */
-  /** Per-list row counts of a just-written lists directory, as the
-    * nList-bounded `trainOcc` manifest CSV ("list:count", sorted) —
-    * the TRAIN-TIME occupancy every build/retrain stores so the
-    * autopilot's imbalance trigger has an exact baseline: on an
-    * untouched index TV(live, trainOcc) = 0 BY CONSTRUCTION, so the
-    * no-fire side of the trigger needs no data-dependent margin. */
-  private def trainOccCsv(spark: org.apache.spark.sql.SparkSession,
-      listsDir: String): String =
-    spark.read.parquet(listsDir)
-      .groupBy(col("list_id").cast("long").as("l"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => s"${r.getLong(0)}:${r.getLong(1)}")
-      .sorted.mkString(",")
-
-  private[graft] def parseOcc(csv: String): Map[Long, Long] =
-    csv.split(",").filter(_.nonEmpty).map { kv =>
-      val i = kv.indexOf(':')
-      kv.substring(0, i).toLong -> kv.substring(i + 1).toLong
-    }.toMap
-
-  /** µ-ized total variation between two list-occupancy histograms,
-    * EXACT-INTEGER end to end: TV = Σ_l |a_l·n_b − b_l·n_a| / (2·n_a·n_b)
-    * by cross-multiplication in BigInt (per-list products overflow Long
-    * at production corpus sizes), and the final µ value is the
-    * round-half-up integer ((num·2,000,000 + den) div (2·den)) — no
-    * double division anywhere, so the only rounding is the declared µ
-    * quantization and a threshold compare can never flip on a ±1 ulp. */
-  private[graft] def occTvMu(a: Map[Long, Long], b: Map[Long, Long]): Long = {
-    val na = a.values.foldLeft(BigInt(0))(_ + _)
-    val nb = b.values.foldLeft(BigInt(0))(_ + _)
-    require(na > 0 && nb > 0,
-      s"occTvMu: empty occupancy histogram (na=$na, nb=$nb)")
-    val num = (a.keySet ++ b.keySet).toSeq.map(l =>
-      (BigInt(a.getOrElse(l, 0L)) * nb - BigInt(b.getOrElse(l, 0L)) * na).abs)
-      .foldLeft(BigInt(0))(_ + _)
-    val den = BigInt(2) * na * nb
-    ((num * 2000000 + den) / (den * 2)).toLong
-  }
-
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, nList: Int = 16, nIters: Int = 1,
       vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
     require(nList > 0, s"nList must be positive, got $nList")
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = IndexLayout.requireManifest(spark, path, IvfIndexFormat)
+    IndexLayout.flipGeneration(spark, path, IvfIndexFormat) { m =>
       val storage = m.getOrElse("storage", "fp")
-      val carried = IndexLayout.dropRetired(spark, path, m)
       // full-precision survivors: the frame that still holds real
       // vectors (the quantized storages' lists frame holds codes)
       val fullFrame = if (storage == "fp") "lists" else "fp"
@@ -1165,85 +1090,72 @@ object Similarity {
         s"retrainIvfIndex: stored '$fullFrame' frame has columns " +
           s"${fullSchema.fieldNames.mkString(",")} — expected id '$idCol' " +
           s"and vector '$vecCol' (pass the index's own column names)")
-      val standing = IndexLayout.readFrame(spark, path, m, fullFrame)
-        .select(col(idCol), col(vecCol))
-      val survivors = IndexLayout.loadTombstones(spark, path, m, idCol) match {
-        case Some(tomb) => standing.join(tomb, Seq(idCol), "left_anti")
-        case None => standing
-      }
-      val newGen = IndexLayout.intParam(m, path, "gen") + 1
-      // the new quantizer: ivfCentroids returns a driver-LOCAL relation
-      // (seeds collected, Lloyd iterations collected) — already
-      // materialized, so nothing below can re-read the index files the
-      // flip will retire, and no defensive pin is needed
-      val cent = ivfCentroids(survivors, nList, nIters, vecCol, idCol)
-      locally {
-        cent.write.mode("overwrite") // staging replay is idempotent
+      Some { newGen =>
+        // every frame the retrain stages replaces its whole composition
+        def replaced(name: String) =
+          name -> IndexLayout.stageReplaceFrame(m, name, newGen)
+        def stageLists(df: DataFrame, name: String): Unit =
+          df.repartition(col("list_id"))
+            .write.mode("overwrite") // staging replay is idempotent
+            .partitionBy("list_id")
+            .parquet(IndexLayout.genRoot(path, name, newGen))
+        val standing = IndexLayout.readFrame(spark, path, m, fullFrame)
+          .select(col(idCol), col(vecCol))
+        val survivors = IndexLayout.loadTombstones(spark, path, m, idCol) match {
+          case Some(tomb) => standing.join(tomb, Seq(idCol), "left_anti")
+          case None => standing
+        }
+        // the new quantizer: ivfCentroids returns a driver-LOCAL relation
+        // (seeds collected, Lloyd iterations collected) — already
+        // materialized, so nothing below can re-read the index files the
+        // flip will retire, and no defensive pin is needed
+        val cent = ivfCentroids(survivors, nList, nIters, vecCol, idCol)
+        cent.write.mode("overwrite")
           .parquet(IndexLayout.genRoot(path, "centroids", newGen))
         val assigned = ivfAssign(survivors, cent, vecCol, idCol)
-        val staged: Map[String, (Seq[String], Seq[String])] =
+        val staged =
           if (storage == "fp") {
-            assigned.repartition(col("list_id"))
-              .write.mode("overwrite").partitionBy("list_id")
-              .parquet(IndexLayout.genRoot(path, "lists", newGen))
-            Map("lists" ->
-              ((Seq(s"lists/g$newGen"), IndexLayout.frameEntries(m, "lists"))))
+            stageLists(assigned, "lists")
+            Seq(replaced("lists"))
           } else {
             // the build's discipline: stage fp first, derive the probe
             // frame (and pq codebook) from a READ-BACK of the staged
             // rows so quantization sees exactly what the re-rank will
-            assigned.repartition(col("list_id"))
-              .write.mode("overwrite").partitionBy("list_id")
-              .parquet(IndexLayout.genRoot(path, "fp", newGen))
+            stageLists(assigned, "fp")
             val fpBack = spark.read.parquet(
               IndexLayout.genRoot(path, "fp", newGen))
-            val (ql, cbStaged) =
-              if (storage == "int8")
-                (quantizedLists(fpBack, vecCol, idCol),
-                  Map.empty[String, (Seq[String], Seq[String])])
-              else {
-                val resid = residualized(fpBack, cent, vecCol, idCol)
-                // stored parameters, LOUD on absence (the intParam
-                // discipline every other pq verb follows) — a truncated
-                // manifest must not silently re-encode at the
-                // compile-time defaults
-                val numSub = IndexLayout.intParam(m, path, "numSub")
-                val numCents = IndexLayout.intParam(m, path, "numCents")
-                val cb = pqTrain(resid.select(col(idCol), col("_res")),
-                  PqTrainSample, numSub, numCents, PqIters,
-                  vecCol = "_res", idCol = idCol)
-                import spark.implicits._
-                Seq(cb.toSeq).toDF("cb").write.mode("overwrite")
-                  .parquet(IndexLayout.genRoot(path, "codebook", newGen))
-                (pqLists(resid, cb, idCol, numSub, numCents),
-                  Map("codebook" -> ((Seq(s"codebook/g$newGen"),
-                    IndexLayout.frameEntries(m, "codebook")))))
-              }
-            ql.repartition(col("list_id"))
-              .write.mode("overwrite").partitionBy("list_id")
-              .parquet(IndexLayout.genRoot(path, "lists", newGen))
-            Map(
-              "lists" -> ((Seq(s"lists/g$newGen"),
-                IndexLayout.frameEntries(m, "lists"))),
-              "fp" -> ((Seq(s"fp/g$newGen"),
-                IndexLayout.frameEntries(m, "fp")))) ++ cbStaged
+            if (storage == "int8") {
+              stageLists(quantizedLists(fpBack, vecCol, idCol), "lists")
+              Seq(replaced("lists"), replaced("fp"))
+            } else {
+              val resid = residualized(fpBack, cent, vecCol, idCol)
+              // stored parameters, LOUD on absence (the intParam
+              // discipline every other pq verb follows) — a truncated
+              // manifest must not silently re-encode at the
+              // compile-time defaults
+              val numSub = IndexLayout.intParam(m, path, "numSub")
+              val numCents = IndexLayout.intParam(m, path, "numCents")
+              val cb = pqTrain(resid.select(col(idCol), col("_res")),
+                PqTrainSample, numSub, numCents, PqIters,
+                vecCol = "_res", idCol = idCol)
+              import spark.implicits._
+              Seq(cb.toSeq).toDF("cb").write.mode("overwrite")
+                .parquet(IndexLayout.genRoot(path, "codebook", newGen))
+              stageLists(pqLists(resid, cb, idCol, numSub, numCents), "lists")
+              Seq(replaced("lists"), replaced("fp"), replaced("codebook"))
+            }
           }
-        val all = staged ++ Map(
-          "centroids" -> ((Seq(s"centroids/g$newGen"),
-            IndexLayout.frameEntries(m, "centroids"))),
-          "tombstones" -> IndexLayout.stageDropFrame(m, "tombstones", newGen))
-        // nList is re-read from the staged quantizer (ivfCentroids
-        // returns exactly the rows it trained — ≤ nList on a corpus
-        // smaller than nList), dim is unchanged by construction
-        val newNList = cent.count()
-        IndexLayout.renewLease(spark, path, lease)
-        IndexLayout.flip(spark, path,
-          m + ("nList" -> newNList.toString) +
-            // the retrain RESETS the imbalance baseline: the staged
-            // lists are the new train-time occupancy
-            ("trainOcc" -> trainOccCsv(spark,
+        IndexLayout.GenerationStage(
+          (staged :+ replaced("centroids")).toMap,
+          // nList is re-read from the staged quantizer (ivfCentroids
+          // returns exactly the rows it trained — ≤ nList on a corpus
+          // smaller than nList), dim is unchanged by construction; the
+          // retrain RESETS the imbalance baseline: the staged lists are
+          // the new train-time occupancy
+          Map("nList" -> cent.count().toString,
+            "trainOcc" -> trainOccCsv(spark,
               IndexLayout.genRoot(path, "lists", newGen))),
-          newGen, all, carried)
+          resolvesTombstones = true)
       }
     }
   }
@@ -1393,14 +1305,7 @@ object Similarity {
     val fullFrame = if (m.getOrElse("storage", "fp") == "fp") "lists" else "fp"
     val rows = IndexLayout.readFrame(spark, path, m, fullFrame)
     val nRows = rows.count()
-    val tomb = IndexLayout.loadTombstones(spark, path, m, idCol)
-      .map(t => broadcast(t.distinct()))
-    // dead = tombstones striking an indexed row (see
-    // maintainMinhashIndex: a re-submitted cumulative delete list must
-    // not re-fire the compaction nightly against zero dead rows)
-    val nDead = tomb
-      .map(t => rows.select(col(idCol)).join(t, Seq(idCol), "left_semi").count())
-      .getOrElse(0L)
+    val (nDead, tomb) = IndexLayout.deadRows(spark, path, m, rows, idCol)
     val live = nRows - nDead
     val liveOcc: Map[Long, Long] =
       if (live == 0 || !m.contains("trainOcc")) Map.empty

@@ -145,22 +145,11 @@ object SketchStore {
     * to serve the dropped days until the retired-directory grace
     * window ([[IndexLayout.RetiredGraceConfKey]]) lapses. */
   def retainFrom(spark: SparkSession, path: String, kind: String,
-      minDay: String): Unit = {
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = requireStore(spark, path, kind)
-      val dayCol = IndexLayout.param(m, path, "dayCol")
-      val carried = IndexLayout.dropRetired(spark, path, m)
-      val stored = IndexLayout.readFrame(spark, path, m, "sketches")
-      val tomb = stored.filter(col(dayCol) < minDay)
-        .select(dayCol).distinct()
-      val dropped: Seq[Any] = tomb.collect().map(_.get(0)).toSeq
-      val newGen = IndexLayout.intParam(m, path, "gen") + 1
-      val staged = Map("sketches" -> IndexLayout.stageCompactFrame(
-        spark, path, m, "sketches", dayCol, dropped, tomb, dayCol, newGen))
-      IndexLayout.renewLease(spark, path, lease)
-      IndexLayout.flip(spark, path, m, newGen, staged, carried)
+      minDay: String): Unit =
+    compact(spark, path, kind) { (m, dayCol) =>
+      IndexLayout.readFrame(spark, path, m, "sketches")
+        .filter(col(dayCol) < minDay).select(dayCol).distinct()
     }
-  }
 
   /** FOLD the composition (the autopilots' composition-length
     * discipline, [[graft.ext.Dedup.foldMinhashComposition]]'s shape):
@@ -169,21 +158,25 @@ object SketchStore {
     * them into the next generation — entries return to
     * ≤ days + 1. No tombstones exist in this family, so the compaction
     * is always the pure fold (an empty anti-join set on `dayCol`). */
-  def fold(spark: SparkSession, path: String, kind: String): Unit = {
-    IndexLayout.withMaintenanceLease(spark, path) { lease =>
-      val m = requireStore(spark, path, kind)
-      val dayCol = IndexLayout.param(m, path, "dayCol")
-      val carried = IndexLayout.dropRetired(spark, path, m)
-      val emptyIds = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          Seq(IndexLayout.frameSchema(m, "sketches")(dayCol))))
-      val newGen = IndexLayout.intParam(m, path, "gen") + 1
-      val staged = Map("sketches" -> IndexLayout.stageCompactFrame(
-        spark, path, m, "sketches", dayCol, Seq.empty, emptyIds, dayCol,
-        newGen))
-      IndexLayout.renewLease(spark, path, lease)
-      IndexLayout.flip(spark, path, m, newGen, staged, carried)
+  def fold(spark: SparkSession, path: String, kind: String): Unit =
+    compact(spark, path, kind) { (m, dayCol) =>
+      IndexLayout.emptyIds(spark, m, "sketches", dayCol)
     }
-  }
+
+  /** The store's one compaction ([[IndexLayout.flipGeneration]]): the
+    * day partitions `doomed` lists (one `dayCol` column) retire whole,
+    * nothing of them is staged, and the committed batch roots fold into
+    * the new generation. */
+  private def compact(spark: SparkSession, path: String, kind: String)
+      (doomed: (Map[String, String], String) => DataFrame): Unit =
+    IndexLayout.flipGeneration(spark, path, SketchStoreFormat) { m =>
+      val dayCol = IndexLayout.param(validateKind(m, path, kind), path, "dayCol")
+      Some { newGen =>
+        val tomb = doomed(m, dayCol)
+        val dropped: Seq[Any] = tomb.collect().map(_.get(0)).toSeq
+        IndexLayout.GenerationStage(Map("sketches" ->
+          IndexLayout.stageCompactFrame(spark, path, m, "sketches", dayCol,
+            dropped, tomb, dayCol, newGen)))
+      }
+    }
 }

@@ -2754,6 +2754,123 @@ class ExtSpec extends SparkSpec {
     assert((err2 eq lone) && err2.getSuppressed.isEmpty)
   }
 
+  test("inParallel: jobs in reused pool threads carry the caller's job tag, never an earlier caller's") {
+    val sc = spark.sparkContext
+    val tags = Seq("graft-inpar-first", "graft-inpar-second")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Set[String])]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val jobTags = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags"))).getOrElse("")
+        val ours = jobTags.split(",").toSet.intersect(tags.toSet)
+        if (ours.nonEmpty) seen.add(e.jobId -> ours)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // two consecutive callers; the second's closures run on the pool
+      // threads the first one created
+      tags.foreach { tag =>
+        sc.addJobTag(tag)
+        try graft.ext.IndexLayout.inParallel(
+          Seq.fill(4)(() => spark.range(10).count()))
+        finally sc.removeJobTag(tag)
+      }
+      def jobsOf(tag: String) = seen.asScala.filter(_._2.contains(tag)).toSeq
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (tags.exists(jobsOf(_).size < 4) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(tags.forall(jobsOf(_).size >= 4),
+        s"every closure's job must carry its caller's tag: ${seen.asScala}")
+      assert(seen.asScala.forall(_._2.size == 1),
+        s"a job carried an earlier caller's tag: ${seen.asScala}")
+      assert(jobsOf(tags(0)).map(_._1).max < jobsOf(tags(1)).map(_._1).min)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("flip protocol: a throwing stage leaves seq, gen, retired and the lease untouched; the real verb's re-run commits (MinHash, IVF, sketch store)") {
+    import spark.implicits._
+    import graft.ext.{IndexLayout, SketchStore}
+    val root = java.nio.file.Files.createTempDirectory("graft-flip-fail")
+    // `path` already holds retired dirs and a standing change: a stage
+    // that first writes junk rows (id `junk`) into the next generation
+    // of `frame`, then throws, must commit nothing and hold no lease;
+    // the real verb's re-run must overwrite the junk and commit
+    def failThenRerun(path: String, format: String, frame: String,
+        partCol: String, idCol: String, junk: Any)(rerun: => Unit): Unit = {
+      val before = IndexLayout.requireManifest(spark, path, format)
+      assert(before.getOrElse("retired", "").nonEmpty)
+      val boom = new IllegalStateException("staging failed")
+      val e = intercept[IllegalStateException] {
+        IndexLayout.flipGeneration(spark, path, format) { m =>
+          Some { newGen =>
+            IndexLayout.readFrame(spark, path, m, frame).limit(1)
+              .withColumn(idCol, lit(junk)).write.mode("overwrite")
+              .partitionBy(partCol).parquet(s"$path/$frame/g$newGen")
+            throw boom
+          }
+        }
+      }
+      assert(e eq boom)
+      val after = IndexLayout.requireManifest(spark, path, format)
+      assert(Seq("seq", "gen", "retired", "retiredAt")
+        .forall(k => after.get(k) == before.get(k)), s"$before\n$after")
+      assert(after == before, "a failed stage must commit nothing")
+      assert(IndexLayout.leaseHolder(spark, path).isEmpty,
+        "a failed stage must release the lease")
+      rerun
+      val done = IndexLayout.requireManifest(spark, path, format)
+      assert(IndexLayout.seqOf(done) == IndexLayout.seqOf(before) + 1 &&
+        done("gen").toInt == before("gen").toInt + 1)
+    }
+    try {
+      // MinHash: a second takedown after a first compaction
+      val mh = s"$root/mh"
+      val corpus = docs.select("doc_id", "text").filter(col("doc_id") < 80)
+      Dedup.saveMinhashIndex(corpus, mh, idBuckets = 4)
+      Dedup.deleteFromMinhashIndex(Seq(1L, 2L).toDF("doc_id"), mh)
+      Dedup.compactMinhashTombstones(spark, mh)
+      Dedup.deleteFromMinhashIndex(Seq(3L, 4L).toDF("doc_id"), mh)
+      failThenRerun(mh, Dedup.MinhashIndexFormat, "sizes", "bucket",
+        "doc_id", -1L)(Dedup.compactMinhashTombstones(spark, mh))
+      val mhIds = corpus.select("doc_id").as[Long].collect().toSet -- Set(1L, 2L, 3L, 4L)
+      val (_, _, sizes) = Dedup.loadMinhashIndex(spark, mh)
+      assert(sizes.select("doc_id").as[Long].collect().toSet == mhIds)
+      assert(Dedup.loadMinhashTombstones(spark, mh).isEmpty)
+      // IVF
+      val ivf = s"$root/ivf"
+      val vecs = emb.filter(col("vec_id") < 120)
+      Similarity.saveIvfIndex(vecs, ivf, nList = 4, nIters = 1)
+      Similarity.deleteFromIvfIndex(Seq(0L, 1L).toDF("vec_id"), ivf)
+      Similarity.compactIvfTombstones(spark, ivf)
+      Similarity.deleteFromIvfIndex(Seq(2L, 3L).toDF("vec_id"), ivf)
+      failThenRerun(ivf, Similarity.IvfIndexFormat, "lists", "list_id",
+        "vec_id", -1L)(Similarity.compactIvfTombstones(spark, ivf))
+      val lists = IndexLayout.readFrame(spark, ivf,
+        Similarity.ivfIndexParams(spark, ivf), "lists")
+      assert(lists.select("vec_id").as[Long].collect().toSet ==
+        vecs.select("vec_id").as[Long].collect().toSet -- Set(0L, 1L, 2L, 3L))
+      assert(Similarity.loadIvfTombstones(spark, ivf).isEmpty)
+      // sketch store: a day appended after a first fold
+      val st = s"$root/store"
+      val days = (1 to 6).map(d => f"2024-03-$d%02d")
+      val daily = days.zipWithIndex.map { case (d, i) =>
+        ("2024-03-01", d, Seq(i.toLong)) }.toDF("week", "day", "sk")
+      SketchStore.save(daily.filter(col("day") <= days(3)), st, "test-kind")
+      SketchStore.appendDays(daily.filter(col("day") === days(4)), st, "test-kind")
+      SketchStore.fold(spark, st, "test-kind")
+      SketchStore.appendDays(daily.filter(col("day") === days(5)), st, "test-kind")
+      failThenRerun(st, SketchStore.SketchStoreFormat, "sketches", "day",
+        "day", "2099-12-31")(SketchStore.fold(spark, st, "test-kind"))
+      val m = IndexLayout.requireManifest(spark, st, SketchStore.SketchStoreFormat)
+      assert(IndexLayout.maxBatchRootCount(m) == 0 &&
+        !m.contains("frames.tombstones"))
+      assert(SketchStore.readAll(spark, st, "test-kind").select("day")
+        .as[String].collect().sorted.toSeq == days)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
+
   test("saveMinhashIndexFromFrames: a per-doc filter of shared frames equals a from-text build") {
     import spark.implicits._
     val corpus = docs.select("doc_id", "text").filter(col("doc_id") < 120)

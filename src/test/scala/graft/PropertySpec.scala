@@ -325,16 +325,14 @@ class PropertySpec extends SparkSpec {
               val m = IndexLayout.readManifest(spark, path).get
               IndexLayout.appendTombstones(spark, path, m,
                 del.toSeq.toDF("id"), "id")
-              val m1 = IndexLayout.readManifest(spark, path).get
-              val tomb = IndexLayout.loadTombstones(spark, path, m1, "id").get
-              val carried = IndexLayout.dropRetired(spark, path, m1)
               val affected = del.map(live).toSeq.distinct
-              val newGen = IndexLayout.intParam(m1, path, "gen") + 1
-              IndexLayout.flip(spark, path, m1, newGen, Map(
-                "data" -> IndexLayout.stageCompactFrame(spark, path, m1,
-                  "data", "pv", affected, tomb, "id", newGen),
-                "tombstones" -> IndexLayout.stageDropFrame(m1, "tombstones",
-                  newGen)), carried)
+              IndexLayout.flipGeneration(spark, path, "graft-proptest") { m1 =>
+                val tomb = IndexLayout.loadTombstones(spark, path, m1, "id").get
+                Some(newGen => IndexLayout.GenerationStage(Map(
+                  "data" -> IndexLayout.stageCompactFrame(spark, path, m1,
+                    "data", "pv", affected, tomb, "id", newGen)),
+                  resolvesTombstones = true))
+              }
               live = live -- del
             }
           }
@@ -491,7 +489,6 @@ class PropertySpec extends SparkSpec {
 
   test("property: manifest linearizability — under random verb schedules with crash points, concurrent readers only ever see exactly a committed state, and as-of reads are immutable") {
     import graft.ext.IndexLayout
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import spark.implicits._
     // the data-visibility counterpart of the lease properties: whatever
@@ -603,25 +600,27 @@ class PropertySpec extends SparkSpec {
                   doomed.toDF("id"), "id")
               }
             case 'k' | 'c' =>
-              val carried = IndexLayout.dropRetired(spark, path, m)
-              val tomb = IndexLayout.loadTombstones(spark, path, m, "id")
-                .map(_.distinct()).getOrElse(spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[Row],
-                  StructType(Seq(StructField("id", LongType)))))
-              val newGen = m("gen").toInt + 1
-              val staged = Map(
-                "data" -> IndexLayout.stageCompactFrame(spark, path, m,
-                  "data", "pv", Seq(0L, 1L, 2L), tomb, "id", newGen),
-                "tombstones" ->
-                  IndexLayout.stageDropFrame(m, "tombstones", newGen))
-              if (v == 'k') {
-                // the compaction resolves the tombstones physically;
-                // the LIVE set is unchanged by construction
-                appended --= tombstoned
-                tombstoned = Set.empty
-                model.put(seq + 1, appended)
-                IndexLayout.flip(spark, path, m, newGen, staged, carried)
-              } // 'c': staged only — crashed before its flip
+              // through the real flip protocol; 'c' is a stage closure
+              // that throws once its staging is written — crashed
+              // before its flip
+              val crash = new IllegalStateException("crashed before the flip")
+              try IndexLayout.flipGeneration(spark, path, "graft-proptest") { _ =>
+                Some { newGen =>
+                  val tomb = IndexLayout.loadTombstones(spark, path, m, "id")
+                    .map(_.distinct())
+                    .getOrElse(IndexLayout.emptyIds(spark, m, "tombstones", "id"))
+                  val staged = Map(
+                    "data" -> IndexLayout.stageCompactFrame(spark, path, m,
+                      "data", "pv", Seq(0L, 1L, 2L), tomb, "id", newGen))
+                  if (v == 'c') throw crash
+                  // the compaction resolves the tombstones physically;
+                  // the LIVE set is unchanged by construction
+                  appended --= tombstoned
+                  tombstoned = Set.empty
+                  model.put(seq + 1, appended)
+                  IndexLayout.GenerationStage(staged, resolvesTombstones = true)
+                }
+              } catch { case e: IllegalStateException if e eq crash => () }
           }
         }
         done.set(true)
